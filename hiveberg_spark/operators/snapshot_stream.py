@@ -1213,12 +1213,12 @@ def stream_reservoir_sample(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     corpus = SnapshotTable.create(
-        spark, os.path.join(base, "corpus"), schema="doc_id long, n_chars int"
+        spark, os.path.join(base, "corpus"), schema="doc_id long, n_chars long"
     )
     reservoir = SnapshotTable.create(
         spark,
         os.path.join(base, "reservoir"),
-        schema="doc_id long, weight int, race_key double",
+        schema="doc_id long, weight long, race_key double",
     )
     sids = [
         corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)

@@ -171,25 +171,27 @@ def _dv_decode(b64: str) -> list[int]:
     return out
 
 
-def _local_pos_df(spark, pairs) -> "DataFrame":
-    """(file_path, pos) rows as an ARROW-backed local relation.
-
-    Every (file, position) tombstone frame the engine builds driver-side
-    goes through here: the list-of-tuples createDataFrame path
-    type-verifies each row in Python (measured 1.5 s of driver CPU at
-    100k tombstones — O(deleted rows) work on the node that must do no
-    data work), while an Arrow table ships columnar buffers and plans as
-    a plain LocalTableScan."""
+def _local_df(spark, rows, ddl: str) -> "DataFrame":
+    """Driver-built rows as an ARROW-backed local relation with the
+    `ddl` schema. Every frame the engine assembles on the driver —
+    (file, position) tombstones, metadata tables — goes through here:
+    the list-of-tuples createDataFrame path type-verifies and pickles
+    each row in Python (measured 1.5 s of driver CPU at 100k
+    tombstones, and a `Scan ExistingRDD` over pickled rows for a
+    7-row metadata table), while an Arrow table ships columnar buffers
+    and plans as a plain LocalTableScan."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pairs = list(pairs)
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
     return spark.createDataFrame(
-        pa.table(
-            {
-                "file_path": pa.array([f for f, _ in pairs], pa.string()),
-                "pos": pa.array([int(p) for _, p in pairs], pa.int64()),
-            }
-        )
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        ),
+        schema,
     )
 
 
@@ -268,6 +270,10 @@ _HISTORY_SCHEMA = (
 )
 
 _REFS_SCHEMA = "name string, type string, snapshot_id long"
+
+#: the fixed layout of every position delete file (Iceberg's
+#: file_path/pos pair) and of the driver-built tombstone frames
+_POS_DELETE_DDL = "file_path string, pos long"
 
 _VALUE_INDEXES_SCHEMA = (
     "column string, index_snapshot_id long, current_snapshot_id long, "
@@ -387,7 +393,8 @@ class SnapshotTable:
                 except (OSError, ValueError):
                     continue
         rows.sort(key=lambda r: r[1])
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "file string, version long, timestamp_ms long, "
             "latest_snapshot_id long",
@@ -1340,8 +1347,9 @@ class SnapshotTable:
     def _record_adopted_base(self, base: str, ptypes: dict[str, str]) -> None:
         """Register a Hive-partitioned adoption root: scans re-attach
         the dir-only partition columns for files under `base` via
-        Spark's basePath discovery, cast to the types pinned here (a
-        pruned file subset must never re-infer a different type)."""
+        Spark's basePath discovery, typed by the explicit read schema
+        (a pruned file subset must never re-infer a different type);
+        `ptypes` are the adoption-time types the stats were typed by."""
         lock = self._acquire_lock()
         try:
             meta = self._read_meta()
@@ -2870,7 +2878,7 @@ class SnapshotTable:
         MERGED with each file's prior DV as of `head` (one DV per file,
         v3 invariant). The per-file position lists come back to the
         driver via toArrow() — columnar buffers, not pickled Rows (the
-        read-side _local_pos_df lesson applied to the write side; a
+        read-side _local_df lesson applied to the write side; a
         collect() of collect_list rows paid O(deleted rows) of driver
         deserialization). MOR deletes are small by construction, the
         same contract as the tiny-delete-file write they replace."""
@@ -3160,9 +3168,7 @@ class SnapshotTable:
                     [(rel,) for rel in sorted(live)], "file_path string"
                 )
                 rows = (
-                    self.spark.read.parquet(
-                        *[os.path.join(self.location, d["path"]) for d in pos]
-                    )
+                    self._read_pos_deletes(pos)
                     .join(F.broadcast(live_paths), "file_path", "left_semi")
                     .distinct()
                 )
@@ -3173,7 +3179,7 @@ class SnapshotTable:
                 for p in _dv_decode(d["bits"])
             ]
             if dv_rows:
-                dv_df = _local_pos_df(self.spark, dv_rows)
+                dv_df = _local_df(self.spark, dv_rows, _POS_DELETE_DDL)
                 rows = dv_df if rows is None else rows.unionByName(dv_df).distinct()
             if rows is not None:
                 if self._dv_enabled(meta):
@@ -3879,8 +3885,9 @@ class SnapshotTable:
         before the rename are resolved through the mapping at scan time
         (Iceberg achieves this with field-ids, IcebergSerDe.java:60-62;
         this is the field-id-free equivalent, valid while old names are
-        not reused). Works on every data format: parquet/ORC resolve via
-        mergeSchema + coalesce at scan, avro resolves each file's header
+        not reused). Works on every data format: parquet/ORC read the
+        old name as an alias field of the explicit read schema and
+        coalesce it at scan (_read_schema), avro resolves each file's header
         names through the log inside the decoder
         (avro_io._resolve_renamed)."""
         lock = self._acquire_lock()
@@ -4082,25 +4089,29 @@ class SnapshotTable:
         finally:
             os.unlink(lock)
 
-    def _widened_read_schema(self, meta: dict) -> StructType | None:
-        """Explicit read schema for tables with widened OR added columns
-        (None otherwise — the zero-overhead default path): the CURRENT
-        schema, plus one field per rename-log OLD name (typed as its
-        current column) so pre-rename files still surface their data
-        for _apply_renames to coalesce. Spark's readers upcast narrow
-        physical types into this schema natively, and null-fill fields
-        a file lacks — which is what makes add_column metadata-only
-        without a driver-side mergeSchema footer sweep at scan time."""
-        if not (meta.get("widenings") or meta.get("added_columns")) or not meta.get(
-            "schema_json"
-        ):
+    def _read_schema(self, meta: dict) -> StructType | None:
+        """The explicit schema every data-file read goes through: the
+        CURRENT schema, plus one field per rename-log OLD name (typed as
+        the current column it resolves to) so pre-rename files still
+        surface their data for _apply_renames to coalesce. Spark's
+        readers upcast narrow physical types into it natively and
+        null-fill fields a file lacks (add_column stays metadata-only),
+        so no read infers a schema from file footers: building a scan
+        launches no Spark job, and columns come back in declared order
+        whatever order a file wrote them in. None only while the table
+        records no schema (created without one, never committed — no
+        data file to read)."""
+        if not meta.get("schema_json"):
             return None
         schema = StructType.fromJson(json.loads(meta["schema_json"]))
-        by_name = {f.name: f for f in schema.fields}
         fields = list(schema.fields)
-        for r in meta.get("renames", []):
-            tgt = by_name.get(r["to"])
-            if tgt is not None and r["from"] not in by_name:
+        resolved = {f.name: f for f in fields}
+        # newest rename first, so an old name in a rename chain
+        # (a -> b -> c) resolves to the current field it ended up as
+        for r in reversed(meta.get("renames", [])):
+            tgt = resolved.get(r["to"])
+            if tgt is not None and r["from"] not in resolved:
+                resolved[r["from"]] = tgt
                 fields.append(type(tgt)(r["from"], tgt.dataType, True))
         return StructType(fields)
 
@@ -4852,34 +4863,22 @@ class SnapshotTable:
         return self._read_files(files, sid, virtual_column)
 
     def _lineage_read_schema(self, meta: dict) -> StructType | None:
-        """Explicit read schema for ROW-LINEAGE reads: the (widened)
-        current schema + rename-generation old names + the physical
-        `__hb_row_id` column rewrites materialize. Forced explicit
-        because without it Spark's parquet reader takes one arbitrary
-        footer's schema for a multi-file load — a mix of rewritten
-        (id-carrying) and plain files would surface or hide the column
-        nondeterministically."""
+        """_read_schema plus the physical `__hb_row_id`/`__hb_last_seq`
+        columns rewrites materialize, for ROW-LINEAGE reads — files
+        that lack them (never rewritten) read them as NULL."""
         from pyspark.sql.types import LongType, StructField
 
-        base = self._widened_read_schema(meta)
+        base = self._read_schema(meta)
         if base is None:
-            if not meta.get("schema_json"):
-                return None
-            schema = StructType.fromJson(json.loads(meta["schema_json"]))
-            fields = list(schema.fields)
-            names = {f.name for f in fields}
-            for r in meta.get("renames", []):
-                if r["to"] in schema.names and r["from"] not in names:
-                    tgt = schema[r["to"]]
-                    fields.append(StructField(r["from"], tgt.dataType, True))
-                    names.add(r["from"])
-            base = StructType(fields)
-        for eng in ("__hb_row_id", "__hb_last_seq"):
-            if eng not in base.names:
-                base = StructType(
-                    list(base.fields) + [StructField(eng, LongType(), True)]
-                )
-        return base
+            return None
+        return StructType(
+            list(base.fields)
+            + [
+                StructField(eng, LongType(), True)
+                for eng in ("__hb_row_id", "__hb_last_seq")
+                if eng not in base.names
+            ]
+        )
 
     def _file_lookup_col(self, mapping: dict):
         """A `file-path -> long` lookup as a literal map EXPRESSION when
@@ -5010,11 +5009,7 @@ class SnapshotTable:
         ]
         renames = meta.get("renames", [])
         drops = meta.get("drops", [])
-        rs = (
-            read_schema
-            if read_schema is not None
-            else self._widened_read_schema(meta)
-        )
+        rs = read_schema if read_schema is not None else self._read_schema(meta)
         # date -> timestamp promotions (v3): the ONE widening the native
         # readers can't upcast — files sealed before the widen read the
         # column as DATE (their physical type) and cast post-read, via
@@ -5201,8 +5196,9 @@ class SnapshotTable:
         IcebergReaderFactory.java:37-52 — Iceberg records the format on
         each DataFile, so ONE table may mix parquet, ORC, and Avro data
         files; here the extension is that record). Parquet/ORC go
-        through Spark's vectorized readers (mergeSchema when pre- and
-        post-rename files coexist); Avro through the pure-Python codec's
+        through Spark's vectorized readers with the explicit
+        `read_schema` (_read_schema: the table's schema plus rename-log
+        alias fields); Avro through the pure-Python codec's
         file-parallel binaryFile path. Groups are unioned by name with
         missing columns null-filled, so schema evolution (add-column,
         rename) composes across formats exactly as within one.
@@ -5230,7 +5226,7 @@ class SnapshotTable:
         meta = self._read_meta()
         # adopted Hive-partitioned roots (add_files): files under a
         # registered base read with basePath so Spark re-attaches the
-        # dir-only partition columns, cast to the adoption-time types
+        # dir-only partition columns, typed by the explicit read schema
         bases = meta.get("adopted_hive_bases", {})
         fields = meta.get("fields")
         name_maps = self._all_file_name_maps(meta) if fields else {}
@@ -5253,7 +5249,7 @@ class SnapshotTable:
                         "files (row lineage is unavailable in the "
                         "pure-Python avro path)"
                     )
-                if read_schema is not None:
+                if meta.get("widenings"):
                     raise NotImplementedError(
                         "type widening is unsupported with avro data files"
                     )
@@ -5295,12 +5291,11 @@ class SnapshotTable:
                     if b is not None:
                         reader = reader.option("basePath", b)
                     if read_schema is not None:
-                        # widened tables: every file reads through an
-                        # explicit schema (narrow physical types upcast
-                        # natively) — mergeSchema would refuse the
-                        # int/long mix. Mapped groups translate the
-                        # schema's CURRENT names back to this group's
-                        # written names first.
+                        # every file reads through the table's schema
+                        # (narrow physical types upcast natively, no
+                        # footer-inference job). Mapped groups translate
+                        # the schema's CURRENT names back to this
+                        # group's written names first.
                         reader = reader.schema(
                             self._group_read_schema(
                                 read_schema, mp, id_to_cur
@@ -5308,16 +5303,7 @@ class SnapshotTable:
                             if mp
                             else read_schema
                         )
-                    elif renames and not mp:
-                        # pre- and post-rename LEGACY files differ in
-                        # column names; merge then resolve through the
-                        # rename log (mapped groups are uniform)
-                        reader = reader.option("mergeSchema", "true")
                     part = reader.format(fmt).load(sub2)
-                    if b is not None and read_schema is None:
-                        for c, t in bases[b].items():
-                            if c in part.columns:
-                                part = part.withColumn(c, F.col(c).cast(t))
                     if lineage:
                         pos = (
                             F.col("_metadata.row_index")
@@ -5407,6 +5393,13 @@ class SnapshotTable:
             # excluded: the group resolves purely by id
         return StructType(gf)
 
+    def _read_pos_deletes(self, dels: list[dict]) -> DataFrame:
+        """The position delete files of manifest entries `dels` as one
+        frame, read through their fixed schema (no footer inference)."""
+        return self.spark.read.schema(_POS_DELETE_DDL).parquet(
+            *[os.path.join(self.location, d["path"]) for d in dels]
+        )
+
     def _apply_mor_deletes(
         self, df: DataFrame, deletes: list[dict], file_seq: dict[str, int],
         renames: list[dict] | None = None,
@@ -5428,8 +5421,7 @@ class SnapshotTable:
         path carries zero overhead."""
         pos = [d for d in deletes if d["type"] == "position"]
         if pos:
-            files = [os.path.join(self.location, d["path"]) for d in pos]
-            dels = self.spark.read.parquet(*files)
+            dels = self._read_pos_deletes(pos)
             df = df.join(
                 dels,
                 (df["__hb_file"] == dels["file_path"])
@@ -5452,9 +5444,10 @@ class SnapshotTable:
             ]
             total = sum(int(d.get("count") or 0) for d in dv_last.values())
             if payload and total <= _DV_DRIVER_DECODE_MAX:
-                dv_df = _local_pos_df(
+                dv_df = _local_df(
                     self.spark,
-                    ((f, p) for f, b in payload for p in _dv_decode(b)),
+                    [(f, p) for f, b in payload for p in _dv_decode(b)],
+                    _POS_DELETE_DDL,
                 )
             elif payload:
                 from pyspark.sql.functions import pandas_udf
@@ -5955,14 +5948,15 @@ class SnapshotTable:
                 with_row_ids=with_row_ids,
             )
             if df is not None:
-                delta_df = _local_pos_df(
+                delta_df = _local_df(
                     self.spark,
-                    (
+                    [
                         (d["file"], p)
                         for d in dv_deltas
                         if d["file"] in common
                         for p in d["positions"]
-                    ),
+                    ],
+                    _POS_DELETE_DDL,
                 )
                 parts.append(
                     df.join(
@@ -5973,9 +5967,7 @@ class SnapshotTable:
                     ).drop("__hb_file", "__hb_pos")
                 )
         if pos:
-            pos_df = self.spark.read.parquet(
-                *[os.path.join(self.location, d["path"]) for d in pos]
-            )
+            pos_df = self._read_pos_deletes(pos)
             targets = sorted(
                 set(
                     r.file_path
@@ -6030,8 +6022,10 @@ class SnapshotTable:
         ref — name, type ('branch' | 'tag'), and the snapshot it
         points at. `main` is included as a branch pointing at the
         current snapshot, matching Iceberg's implicit main ref."""
-        return self.spark.createDataFrame(
-            self._refs_rows(self._read_meta()), _REFS_SCHEMA
+        return _local_df(
+            self.spark,
+            self._refs_rows(self._read_meta()),
+            _REFS_SCHEMA,
         )
 
     @staticmethod
@@ -6076,9 +6070,7 @@ class SnapshotTable:
                 [(r,) for r in live_rels], "file_path string"
             )
             dead = (
-                self.spark.read.parquet(
-                    *[os.path.join(self.location, d["path"]) for d in pos]
-                )
+                self._read_pos_deletes(pos)
                 .join(F.broadcast(live_df), "file_path", "left_semi")
                 .distinct()
                 .count()
@@ -6102,8 +6094,10 @@ class SnapshotTable:
         (their changes are not in the current state) while staying
         time-travelable, exactly Iceberg's `is_current_ancestor`
         distinction."""
-        return self.spark.createDataFrame(
-            self._history_rows(self._read_meta()), _HISTORY_SCHEMA
+        return _local_df(
+            self.spark,
+            self._history_rows(self._read_meta()),
+            _HISTORY_SCHEMA,
         )
 
     @staticmethod
@@ -6139,8 +6133,10 @@ class SnapshotTable:
         """The `__snapshots` metadata table (SnapshotIterable.java:48-57):
         (committed_at, snapshot_id, parent_id, operation, manifest_list,
         summary map)."""
-        return self.spark.createDataFrame(
-            self._snapshots_rows(self._read_meta()), _SNAPSHOT_SCHEMA
+        return _local_df(
+            self.spark,
+            self._snapshots_rows(self._read_meta()),
+            _SNAPSHOT_SCHEMA,
         )
 
     def first_snapshot_id(self) -> int | None:
@@ -6372,8 +6368,10 @@ class SnapshotTable:
         readable lower/upper column bounds from the manifest stats.
         Metadata-only: no data file is opened; this is how an operator
         inspects layout/pruning health of a 100 TB table for free."""
-        return self.spark.createDataFrame(
-            self._files_rows(snapshot_id), _FILES_SCHEMA
+        return _local_df(
+            self.spark,
+            self._files_rows(snapshot_id),
+            _FILES_SCHEMA,
         )
 
     def _files_rows(self, snapshot_id: int | None = None) -> list[tuple]:
@@ -6478,7 +6476,8 @@ class SnapshotTable:
         dvs = _dv_last_per_file(all_dels)
         parts: list[DataFrame] = []
         if pos:
-            sidmap = self.spark.createDataFrame(
+            sidmap = _local_df(
+                self.spark,
                 [(d["path"], int(d["sid"])) for d in pos],
                 "delete_file_path string, delete_snapshot_id long",
             )
@@ -6491,9 +6490,7 @@ class SnapshotTable:
                 "",
             )
             parts.append(
-                self.spark.read.parquet(
-                    *[os.path.join(self.location, d["path"]) for d in pos]
-                )
+                self._read_pos_deletes(pos)
                 .select("file_path", "pos", rel_path.alias("delete_file_path"))
                 .join(F.broadcast(sidmap), "delete_file_path", "left")
                 .select(
@@ -6507,33 +6504,9 @@ class SnapshotTable:
             for p in _dv_decode(d["bits"])
         ]
         if dv_rows:
-            # Arrow local relation, same reason as _local_pos_df:
-            # O(tombstones) rows must not walk the driver's per-row
-            # verify path
-            import pyarrow as pa
-
-            parts.append(
-                self.spark.createDataFrame(
-                    pa.table(
-                        {
-                            "file_path": pa.array(
-                                [r[0] for r in dv_rows], pa.string()
-                            ),
-                            "pos": pa.array(
-                                [r[1] for r in dv_rows], pa.int64()
-                            ),
-                            "delete_file_path": pa.array(
-                                [r[2] for r in dv_rows], pa.string()
-                            ),
-                            "delete_snapshot_id": pa.array(
-                                [r[3] for r in dv_rows], pa.int64()
-                            ),
-                        }
-                    )
-                )
-            )
+            parts.append(_local_df(self.spark, dv_rows, schema))
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return _local_df(self.spark, [], schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -6603,7 +6576,8 @@ class SnapshotTable:
                         len(m.get("deletes", [])),
                     )
                 )
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "path string, length long, added_snapshot_id long, "
             "data_files_count long, delete_files_count long",
@@ -6695,7 +6669,8 @@ class SnapshotTable:
                                 (info.get(f) or {}).get("records"),
                             )
                         )
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "status int, snapshot_id long, data_sequence_number long, "
             "content string, file_path string, record_count long",
@@ -6748,7 +6723,8 @@ class SnapshotTable:
             )
             for (content, path), (adder, records) in sorted(seen.items())
         ]
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "content string, file_path string, file_format string, "
             "added_snapshot_id long, record_count long, live boolean",
@@ -6775,7 +6751,8 @@ class SnapshotTable:
             rows.append(
                 (col, entry["snapshot_id"], current, lag, entry["path"])
             )
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "column string, pinned_snapshot_id long, "
             "current_snapshot_id long, lag_commits int, path string",
@@ -6807,7 +6784,8 @@ class SnapshotTable:
         rows = [
             (dict(key), c, rec, b) for key, (c, rec, b) in sorted(agg.items())
         ]
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "partition map<string,string>, file_count long, "
             "record_count long, total_bytes long",
@@ -6878,7 +6856,8 @@ class SnapshotTable:
         point probes on the column are degrading toward no-index and
         `refresh_value_index` would restore full pruning. Metadata-only
         (manifest walks); the postings store is never opened."""
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             self._value_indexes_rows(self._read_meta()),
             _VALUE_INDEXES_SCHEMA,
         )
@@ -6936,7 +6915,8 @@ class SnapshotTable:
                 rows.append(
                     (int(sid), c, e["row_count"], s["ndv"], s["null_count"])
                 )
-        return self.spark.createDataFrame(
+        return _local_df(
+            self.spark,
             rows,
             "snapshot_id long, column string, row_count long, "
             "ndv long, null_count long",

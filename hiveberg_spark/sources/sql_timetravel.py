@@ -153,7 +153,6 @@ def sql_with_time_travel(
     clauses against snapshot tables in `warehouse`, stored views
     (see _register_stored_views), and bare snapshot-table names."""
     _register_stored_views(spark, warehouse, sql, _depth)
-    _register_referenced_tables(spark, warehouse, sql)
 
     def _load(name: str) -> SnapshotTable | None:
         loc = os.path.join(warehouse, name)
@@ -191,6 +190,10 @@ def sql_with_time_travel(
     rewritten = _VERSION_RE.sub(sub_version, sql)
     rewritten = _VERSION_TAG_RE.sub(sub_version_tag, rewritten)
     rewritten = _TIME_RE.sub(sub_time, rewritten)
+    # bare names only, AFTER the AS OF rewrites: `t VERSION AS OF n`
+    # became `t__v<n>` (no `\b` between `t` and `__`), so a pure
+    # time-travel query registers no current-snapshot scan of `t`
+    _register_referenced_tables(spark, warehouse, rewritten)
     return spark.sql(rewritten)
 
 

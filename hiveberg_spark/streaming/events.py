@@ -9,6 +9,7 @@ runs unbounded against a live directory/Kafka source at scale).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -108,18 +109,27 @@ def run_to_memory(
     df: DataFrame, output_mode: str = "complete", name: str | None = None
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the final result as a batch DataFrame."""
+    memory sink and return the final result as a batch DataFrame. The
+    checkpoint directory is removed once the query has ended, whether
+    it finished or raised; the memory-sink table stays, because the
+    returned frame reads it."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
     checkpoint = os.path.join(
         tempfile.gettempdir(), f"hbs_checkpoint_{uuid.uuid4().hex[:12]}"
     )
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = None
+    try:
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return df.sparkSession.table(name)

@@ -3604,3 +3604,90 @@ def test_metadata_columns_scan(spark, warehouse):
 
     with _pytest.raises(ValueError, match="parquet"):
         o.scan_with_metadata_columns()
+
+
+def test_scan_construction_launches_no_spark_job(spark, warehouse):
+    """Every data-file read goes through the table's recorded schema,
+    and position delete files through their fixed (file_path, pos)
+    schema: building a scan infers nothing from footers, so it launches
+    no Spark job before the action."""
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "nojob"))
+    t.append(_simple_df(spark, [(i, f"r{i}") for i in range(6)]))
+    t.append(_simple_df(spark, [(i, f"r{i}") for i in range(6, 9)]))
+    t.delete_where("id = 2", mode="merge-on-read")
+    meta = t._read_meta()
+    assert any(
+        d["type"] == "position"
+        for d in t._raw_deletes_as_of(meta, meta["current_snapshot_id"])
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("hbs_scan_construction", "scan construction")
+    try:
+        cur = t.scan()
+        where = t.scan_where("id >= 1")
+        old = t.scan(snapshot_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(
+        sc.statusTracker().getJobIdsForGroup("hbs_scan_construction")
+    ) == []
+    assert sorted(r.id for r in cur.collect()) == [0, 1, 3, 4, 5, 6, 7, 8]
+    assert sorted(r.id for r in where.collect()) == [1, 3, 4, 5, 6, 7, 8]
+    assert sorted(r.id for r in old.collect()) == list(range(6))
+
+
+def test_scan_reads_declared_column_order(spark, warehouse):
+    """An append that wrote the columns in a different physical order
+    reads back in the declared order, with each value under its own
+    column (files resolve by name through the recorded schema)."""
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "order"))
+    t.append(_simple_df(spark, [(1, "a"), (2, "b")]))
+    t.append(
+        spark.createDataFrame([("c", 3), ("d", 4)], "data string, id long")
+    )
+    for df in (t.scan(virtual_column=None), t.scan_where("id > 0")):
+        assert df.columns[:2] == ["id", "data"]
+        assert sorted((r.id, r.data) for r in df.collect()) == [
+            (1, "a"), (2, "b"), (3, "c"), (4, "d")
+        ]
+
+
+def test_avro_table_scans_with_recorded_schema(spark, warehouse):
+    """Avro data files decode through their own headers; the recorded
+    schema every table with data carries must not make the avro group
+    raise — only a type widening does."""
+    t = SnapshotTable.create(
+        spark, os.path.join(warehouse, "avro_rs"), file_format="avro"
+    )
+    t.append(_simple_df(spark, [(1, "a"), (2, "b")]))
+    t.append(_simple_df(spark, [(3, "c")]))
+    got = sorted((r.id, r.data) for r in t.scan(virtual_column=None).collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
+    assert t.scan(snapshot_id=1).count() == 2
+
+
+def test_sql_time_travel_registers_only_bare_names(spark, warehouse):
+    """`t VERSION AS OF n` resolves to its own snapshot view; a query
+    that references only that form registers no current-snapshot `t`
+    view, while one mixing `t` and `t VERSION AS OF n` resolves both."""
+    from hiveberg_spark.sources.sql_timetravel import sql_with_time_travel
+
+    name = "tt_bare_only"
+    t = SnapshotTable.create(spark, os.path.join(warehouse, name))
+    t.append(_simple_df(spark, [(1, "a")]))
+    t.append(_simple_df(spark, [(2, "b")]))
+    spark.catalog.dropTempView(name)
+    out = sql_with_time_travel(
+        spark, warehouse, f"SELECT COUNT(*) AS n FROM {name} VERSION AS OF 1"
+    )
+    assert out.collect()[0].n == 1
+    assert not spark.catalog.tableExists(name)
+    both = sql_with_time_travel(
+        spark,
+        warehouse,
+        f"SELECT (SELECT COUNT(*) FROM {name}) AS cur, "
+        f"(SELECT COUNT(*) FROM {name} VERSION AS OF 1) AS old",
+    ).collect()[0]
+    assert (both.cur, both.old) == (2, 1)
+    assert spark.catalog.tableExists(name)
+    spark.catalog.dropTempView(name)

@@ -249,3 +249,27 @@ def test_sort_within_partitions(spark, sf_dir):
     for part in parts:
         prices = [r.l_extendedprice for r in part]
         assert prices == sorted(prices)
+
+
+def test_run_to_memory_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """Each run_to_memory call removes its checkpoint directory once the
+    query ends; the memory-sink table the result reads stays."""
+    import glob
+    import tempfile
+
+    from hiveberg_spark.streaming.events import run_to_memory
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = tmp_path / "src"
+    spark.range(5).write.parquet(str(src))
+    outs = []
+    for i in range(2):
+        s = spark.readStream.schema("id long").parquet(str(src))
+        outs.append(
+            run_to_memory(
+                s.groupBy().count(), output_mode="complete",
+                name=f"ckpt_leak_{i}",
+            )
+        )
+    assert glob.glob(str(tmp_path / "hbs_checkpoint_*")) == []
+    assert [o.collect()[0]["count"] for o in outs] == [5, 5]
