@@ -2970,7 +2970,7 @@ def embedding_dim_stats_audit(spark, sf_dir):
 _TRIANGLE_SQL = (
     _BLOCKED_EDGES_SQL
     + """
-    , und AS (
+    , und AS MATERIALIZED (
       SELECT DISTINCT t.vid AS a, t.nb AS b
       FROM topk t JOIN topk r ON r.vid = t.nb AND r.nb = t.vid
       WHERE t.vid < t.nb

@@ -66,6 +66,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from hiveberg_spark.sources.avro_io import unescape_path_name
+from hiveberg_spark.sources.driver_write import (
+    driver_write_codec,
+    write_parquet_on_driver,
+)
 
 DEFAULT_VIRTUAL_COLUMN = "snapshot__id"  # SystemTableUtil.java:29
 SNAPSHOTS_SUFFIX = "__snapshots"  # TableResolverUtil.java:39
@@ -2825,15 +2829,20 @@ class SnapshotTable:
         delete_uuid = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.location, "deletes", delete_uuid)
         # tiny relative to data by construction (that is why MOR was
-        # chosen); one sorted file keeps the read-side anti-join input
-        # clustered by target file. repartition(1), NOT coalesce(1):
+        # chosen); one file sorted by (file_path, pos) or by the key
+        # columns keeps the read-side anti-join input clustered by
+        # target file. One under driver_write.MAX_BYTES is written by
+        # pyarrow on the driver. repartition(1), NOT coalesce(1):
         # coalesce's narrow dependency collapses the WHOLE upstream
         # stage — the full-table predicate scan that produced the hits —
         # into a single task, serializing an O(table) read at scale; the
         # exchange moves only the tiny hit rows to the one writer task.
-        rows.repartition(1).sortWithinPartitions(rows.columns[0]).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
+        rows = rows.repartition(1).sortWithinPartitions(*rows.columns)
+        codec = driver_write_codec(rows)
+        if codec is not None:
+            write_parquet_on_driver(rows, out_dir, codec)
+        else:
+            rows.write.mode("overwrite").parquet(out_dir)
         entries = []
         import pyarrow.parquet as pq
 
@@ -3110,10 +3119,11 @@ class SnapshotTable:
                     continue
                 for root, _, names in os.walk(root_dir, topdown=False):
                     for fn in names:
-                        # content files only — Spark's _SUCCESS/.crc
-                        # markers sit beside LIVE files and are never
-                        # manifested; sweeping them would be harmless
-                        # but noisy, so scope to data extensions
+                        # content files only — the _SUCCESS/.crc
+                        # markers the Spark writer leaves (the driver
+                        # writer leaves none) sit beside LIVE files and
+                        # are never manifested; sweeping them would be
+                        # harmless but noisy, so scope to data extensions
                         if not fn.endswith((".parquet", ".orc", ".avro")):
                             continue
                         full = os.path.join(root, fn)
@@ -3460,21 +3470,30 @@ class SnapshotTable:
             )
             if codec:
                 write_opts["compression"] = codec
+            driver_codec = None
             if fmt == "parquet":
                 # Iceberg write.parquet.bloom-filter-enabled.column.<c>:
                 # per-column bloom filters for row-group skipping on
                 # high-cardinality point probes min/max can't serve —
                 # passed straight to parquet-mr via the column-suffixed
                 # hadoop option
-                for c in [
+                bloom = [
                     x.strip()
                     for x in props.get(
                         "write.parquet.bloom-filter-columns", ""
                     ).split(",")
                     if x.strip() and x.strip() in df.columns
-                ]:
+                ]
+                for c in bloom:
                     write_opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
-            if spec:
+                if not (spec or order_spec or bloom):
+                    # a frame under driver_write.MAX_BYTES skips the
+                    # Spark write job's fixed cost (committer, _temporary,
+                    # markers); the file is the one parquet-mr would write
+                    driver_codec = driver_write_codec(writer, codec)
+            if driver_codec is not None:
+                write_parquet_on_driver(writer, data_dir, driver_codec)
+            elif spec:
                 for tr in spec:
                     name = _pfield_name(tr)
                     writer = writer.withColumn(

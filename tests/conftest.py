@@ -7,6 +7,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+
+def pytest_configure(config):
+    # every run ends with its 30 slowest tests, so a long suite's log
+    # shows where its time went; an explicit --durations wins
+    if config.option.durations is None:
+        config.option.durations = 30
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 

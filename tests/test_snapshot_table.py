@@ -3691,3 +3691,257 @@ def test_sql_time_travel_registers_only_bare_names(spark, warehouse):
     assert (both.cur, both.old) == (2, 1)
     assert spark.catalog.tableExists(name)
     spark.catalog.dropTempView(name)
+
+
+# -- driver-resident commit writes (sources/driver_write.py) ------------
+
+_ALL_TYPES_DDL = (
+    "b byte, s short, i int, l long, f float, d double, bo boolean, "
+    "st string, dd date, ts timestamp, tn timestamp_ntz"
+)
+
+
+def _all_types_df(spark):
+    """An Arrow-backed local relation (so its size estimate admits the
+    driver writer) holding every accepted type, NULLs, and dates and
+    timestamps before the Gregorian cut-over."""
+    import datetime as dt
+
+    from hiveberg_spark.sources.snapshot_table import _local_df
+
+    rows = [
+        (1, 2, 3, 4, 1.5, 2.5, True, "a", dt.date(2020, 1, 1),
+         dt.datetime(2020, 1, 1, 1, 2, 3), dt.datetime(2020, 1, 1, 1, 2, 3)),
+        (None,) * 11,
+        (-1, -2, -3, -4, -1.5, -2.5, False, "zz", dt.date(1000, 1, 1),
+         dt.datetime(1200, 1, 1, 1, 2, 3), dt.datetime(1300, 6, 1, 0, 0, 1)),
+    ] + [
+        (i % 7, i, i * 3, i * 1000, i / 4, i / 8, i % 2 == 0, f"v{i % 5}",
+         dt.date(2021, 1 + i % 12, 1), dt.datetime(2021, 1, 1, i % 24),
+         dt.datetime(2022, 1, 1, 0, i % 60))
+        for i in range(40)
+    ]
+    return _local_df(spark, rows, _ALL_TYPES_DDL)
+
+
+def _data_files(t) -> list[str]:
+    return sorted(
+        os.path.join(root, fn)
+        for root, _, names in os.walk(os.path.join(t.location, "data"))
+        for fn in names
+    )
+
+
+def _driver_written(path: str) -> bool:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.created_by.startswith("parquet-cpp")
+
+
+def test_driver_write_round_trips_every_accepted_type(spark, warehouse):
+    src = _all_types_df(spark)
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "dw_types"))
+    t.append(src)
+    (path,) = _data_files(t)
+    assert _driver_written(path)
+    got = t.scan(virtual_column=None)
+    assert got.schema.simpleString() == src.schema.simpleString()
+    # the footer's Spark version marks the proleptic calendar, so even a
+    # session that refuses ambiguous pre-1582 values reads them
+    key = "spark.sql.parquet.datetimeRebaseModeInRead"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "EXCEPTION")
+    try:
+        rows = got.collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert sorted(rows, key=str) == sorted(src.collect(), key=str)
+    assert sorted(t.scan_where("l >= 4000", virtual_column=None).collect(), key=str) == sorted(
+        src.where("l >= 4000").collect(), key=str
+    )
+
+
+def test_driver_write_nan_column_is_never_pruned(spark, warehouse):
+    """Spark orders NaN above every number, but pyarrow's footer bounds
+    leave NaN out; a file holding NaN must not be pruned by them."""
+    from hiveberg_spark.sources.snapshot_table import _local_df
+
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "dw_nan"))
+    t.append(_local_df(spark, [(1, 2.5), (2, float("nan"))], "id long, d double"))
+    (path,) = _data_files(t)
+    assert _driver_written(path)
+    assert [r.id for r in t.scan_where("d > 5", virtual_column=None).collect()] == [2]
+
+
+def test_driver_write_footer_and_stats_match_spark_writer(spark, warehouse, monkeypatch):
+    """The same frame committed through both writers: Spark infers the
+    same StructType from either footer, and the manifests record the
+    same record counts and min/max stats."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from hiveberg_spark.sources import driver_write
+
+    src = _all_types_df(spark).coalesce(1)
+    fast = SnapshotTable.create(spark, os.path.join(warehouse, "dw_fast"))
+    fast.append(src)
+    slow = SnapshotTable.create(spark, os.path.join(warehouse, "dw_slow"))
+    # a bound <= 0 turns the driver writer off
+    monkeypatch.setattr(driver_write, "MAX_BYTES", 0)
+    slow.append(src)
+    (fp,) = _data_files(fast)
+    sp = [p for p in _data_files(slow) if p.endswith(".parquet")]
+    assert len(sp) == 1 and _driver_written(fp) and not _driver_written(sp[0])
+    assert spark.read.parquet(fp).schema == spark.read.parquet(sp[0]).schema
+    assert pq.ParquetFile(fp).schema_arrow == pq.ParquetFile(sp[0]).schema_arrow
+    footers = [pq.ParquetFile(p).metadata.metadata for p in (fp, sp[0])]
+    # pyarrow writes footer key/values only beside its own schema entry
+    assert footers[0].keys() == footers[1].keys() | {b"ARROW:schema"}
+    row_meta = b"org.apache.spark.sql.parquet.row.metadata"
+    assert StructType.fromJson(json.loads(footers[0][row_meta])) == (
+        StructType.fromJson(json.loads(footers[1][row_meta]))
+    )
+
+    def dictionary_encoded(path):
+        rg = pq.ParquetFile(path).metadata.row_group(0)
+        return [
+            any("DICTIONARY" in e for e in rg.column(i).encodings)
+            for i in range(rg.num_columns)
+        ]
+
+    # parquet-mr's fallback rule decides each column the same way
+    assert dictionary_encoded(fp) == dictionary_encoded(sp[0])
+    entries = [
+        t._read_manifest_entries(t._read_meta()["snapshots"][-1])
+        for t in (fast, slow)
+    ]
+    assert [e[1] for e in entries[0]] == [e[1] for e in entries[1]]
+    assert entries[0][0][1]  # stats were recorded at all
+    records = [
+        [r.record_count for r in t.files().collect()] for t in (fast, slow)
+    ]
+    assert records[0] == records[1] == [43]
+
+
+def test_driver_write_gate_declines(spark, warehouse, monkeypatch):
+    """Partition specs, sort orders, parquet bloom columns, decimals, a
+    requested file count above one, a Generate, Python code, ORC and
+    avro all keep the Spark writer (or the avro codec)."""
+    import hiveberg_spark.sources.snapshot_table as st
+
+    def refuse(*_a, **_k):
+        raise AssertionError("driver writer taken")
+
+    monkeypatch.setattr(st, "write_parquet_on_driver", refuse)
+    src = st._local_df(spark, [(i, f"r{i % 3}") for i in range(12)], "id long, data string")
+    with pytest.raises(AssertionError, match="driver writer taken"):
+        SnapshotTable.create(spark, os.path.join(warehouse, "dg_ctl")).append(src)
+    cases = {
+        "spec": ({"partition_spec": [("bucket", "id", 4)]}, {}, src),
+        "sort": ({}, {"write.sort.order": "id"}, src),
+        "bloom": ({}, {"write.parquet.bloom-filter-columns": "id"}, src),
+        "decimal": ({}, {}, src.withColumn("id", F.col("id").cast("decimal(10,2)"))),
+        "coalesce": ({}, {}, src.coalesce(2)),
+        "explode": ({}, {}, src.select("id", F.explode(F.array("data", "data")).alias("data"))),
+        "map_in_arrow": ({}, {}, src.mapInArrow(lambda batches: batches, src.schema)),
+        "python_udf": ({}, {}, src.withColumn("data", F.udf(lambda v: v * 3, "string")("data"))),
+        "orc": ({"file_format": "orc"}, {}, src),
+        "avro": ({"file_format": "avro"}, {}, src),
+    }
+    for name, (kw, props, frame) in cases.items():
+        t = SnapshotTable.create(spark, os.path.join(warehouse, f"dg_{name}"), **kw)
+        if props:
+            t.set_properties(props)
+        t.append(frame)
+        assert t.scan(virtual_column=None).count() == frame.count(), name
+
+
+def test_driver_write_zero_row_commit_writes_no_file(spark, warehouse):
+    from hiveberg_spark.sources.snapshot_table import _local_df
+
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "dw_empty"))
+    t.append(_local_df(spark, [(1, "a")], "id long, data string"))
+    sid = t.append(_local_df(spark, [], "id long, data string"))
+    meta = t._read_meta()
+    assert meta["current_snapshot_id"] == sid == 2
+    assert t._read_manifest_json(meta["snapshots"][-1])["files"] == []
+    # no Spark job ran, so no empty part, no _SUCCESS, no directory
+    assert len(_data_files(t)) == 1
+    assert t.scan(virtual_column=None).count() == 1
+
+
+def test_driver_write_append_runs_one_job_and_leaves_no_markers(
+    spark, warehouse, tmp_path
+):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({"id": list(range(100)), "data": ["x"] * 100}), src)
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "dw_jobs"))
+    frame = spark.read.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("hbs_driver_write", "driver-resident append")
+    try:
+        t.append(frame)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("hbs_driver_write")) == 1
+    (path,) = _data_files(t)
+    assert path.endswith(".snappy.parquet") and _driver_written(path)
+    assert os.listdir(os.path.dirname(path)) == [os.path.basename(path)]
+    assert t.scan(virtual_column=None).count() == 100
+
+
+def test_driver_write_mor_delete_file_is_one_sorted_file(spark, warehouse):
+    import pyarrow.parquet as pq
+
+    from hiveberg_spark.sources.snapshot_table import _local_df
+
+    t = SnapshotTable.create(spark, os.path.join(warehouse, "dw_mor"))
+    for k in range(3):
+        t.append(_local_df(spark, [(k * 50 + i, "d") for i in range(50)], "id long, data string"))
+    t.delete_where("id % 7 = 3", mode="merge-on-read")
+    deletes = [
+        os.path.join(root, fn)
+        for root, _, names in os.walk(os.path.join(t.location, "deletes"))
+        for fn in names
+    ]
+    assert len(deletes) == 1 and _driver_written(deletes[0])
+    rows = pq.read_table(deletes[0]).to_pylist()
+    keys = [(r["file_path"], r["pos"]) for r in rows]
+    assert keys == sorted(keys) and len(keys) == len([i for i in range(150) if i % 7 == 3])
+    got = sorted(r.id for r in t.scan(virtual_column=None).collect())
+    assert got == [i for i in range(150) if i % 7 != 3]
+
+
+def test_driver_write_bound_counts_rows_of_compressible_sources(
+    spark, warehouse, tmp_path
+):
+    """A run-length-encoded parquet source is a few KB on disk, which is
+    Spark's size estimate, but holds megabytes once collected. The gate
+    counts its footer rows at Spark's row width, so a source just above
+    `MAX_BYTES` keeps the Spark writer and one just below takes the
+    driver writer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hiveberg_spark.sources import driver_write
+
+    row = 8 + 8 + 20  # Spark's row overhead, a long and a string
+    for name, rows, driver in (
+        ("above", driver_write.MAX_BYTES // row + 1000, False),
+        ("below", driver_write.MAX_BYTES // row - 1000, True),
+    ):
+        src = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"id": [7] * rows, "data": ["same"] * rows}), src)
+        assert os.path.getsize(src) < 64 * 1024
+        frame = spark.read.parquet(src)
+        assert frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() < 64 * 1024
+        t = SnapshotTable.create(spark, os.path.join(warehouse, f"dw_rle_{name}"))
+        t.append(frame)
+        paths = [p for p in _data_files(t) if p.endswith(".parquet")]
+        assert [_driver_written(p) for p in paths] == [driver], name
+        assert t.scan(virtual_column=None).count() == rows
