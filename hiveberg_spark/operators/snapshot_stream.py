@@ -17,6 +17,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -113,7 +117,7 @@ def apply_changelog(changes: DataFrame, target, key_cols: list[str]) -> None:
         changes.unpersist()
 
 
-def _write_ticks_ordered(spark, tick_dir: str, sids: list[int]) -> None:
+def _write_ticks_ordered(tick_dir: str, sids: list[int]) -> None:
     """Write one single-row tick parquet per snapshot id with STRICTLY
     increasing mtimes. FileStreamSource orders candidate files by
     modification time, so an mtime tie between two ticks can admit the
@@ -140,6 +144,86 @@ def _write_ticks_ordered(spark, tick_dir: str, sids: list[int]) -> None:
         )
         stamp = 1_000_000_000 + i * 10
         os.utime(path, (stamp, stamp))
+
+
+@contextmanager
+def stream_workspace(prefix: str):
+    """A fresh `<tmp>/<prefix>_<uuid10>` directory for one streaming
+    query's tables, ticks and checkpoint. It is removed when the block
+    exits, whether the query returned or raised; a query returns a
+    `localCheckpoint()` of its result from inside the block, so nothing
+    it returns still reads from here."""
+    base = os.path.join(
+        tempfile.gettempdir(), f"{prefix}_{uuid.uuid4().hex[:10]}"
+    )
+    os.makedirs(base)
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _save_cursor(path: str, state: dict) -> None:
+    # temp file + rename: a crash mid-write leaves the old cursor whole
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(state, f)
+    os.replace(tmp, path)
+
+
+def run_per_commit(spark, base: str, sids: list[int], on_range) -> list:
+    """Replay a snapshot-id chain one commit per micro-batch: one tick
+    file per sid under `base/ticks`, read by a checkpointed Structured
+    Streaming query with maxFilesPerTrigger=1 and availableNow. Each
+    new tick calls `on_range(lo, hi)` for the commits in (lo, hi],
+    where `lo` is the cursor (0 before the first commit), then moves
+    the cursor to `hi`. A tick at or below the cursor is a replay after
+    restart and is skipped. Returns the applied `(lo, hi, value)`
+    ranges, where `value` is what `on_range` returned (JSON-encodable);
+    more than one range proves the commits arrived in separate
+    micro-batches, not one collapsed replay."""
+    tick_dir = os.path.join(base, "ticks")
+    cursor_path = os.path.join(base, "cursor.json")
+    os.makedirs(tick_dir)
+    _write_ticks_ordered(tick_dir, sids)
+    _save_cursor(cursor_path, {"cursor": 0, "ranges": []})
+
+    def advance(batch_df, batch_id):
+        with open(cursor_path) as f:
+            state = json.load(f)
+        lo = state["cursor"]
+        # aggregate JVM-side: the max is one scalar back to the driver
+        # (VERDICT r6 #4 - never collect rows to reduce in Python)
+        hi = batch_df.agg(F.max("sid")).first()[0]
+        if hi <= lo:
+            return  # replayed tick after restart: already applied
+        value = on_range(lo, hi)
+        ranges = state["ranges"] + [[lo, hi, value]]
+        _save_cursor(cursor_path, {"cursor": hi, "ranges": ranges})
+
+    q = (
+        spark.readStream.schema("sid long")
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "1")
+        .format("parquet")
+        .load(tick_dir)
+        .writeStream.foreachBatch(advance)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    with open(cursor_path) as f:
+        return [tuple(r) for r in json.load(f)["ranges"]]
+
+
+def _appended(table, lo: int, hi: int) -> DataFrame:
+    """Rows the commits in (lo, hi] appended to an append-only table:
+    the whole snapshot `hi` for the first range, else the file-level
+    `scan_changes` delta — never a re-scan of earlier commits."""
+    if lo == 0:
+        return table.scan(snapshot_id=hi, virtual_column=None)
+    return table.scan_changes(lo, hi, virtual_column=None)
 
 
 def _applied_sids(table) -> set[int]:
@@ -185,86 +269,47 @@ def stream_changelog_source(spark, sf_dir):
     O(that commit's churned files) via the file-level changelog diff,
     never a table scan, so an unbounded run tails a 100 TB table at the
     cost of its deltas."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.catalog import load_table
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_cdcstream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
 
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    src = SnapshotTable.create(spark, os.path.join(base, "src"), schema=nation.schema)
-    mirror = SnapshotTable.create(
-        spark, os.path.join(base, "mirror"), schema=nation.schema
-    )
+    with stream_workspace("hbs_cdcstream") as base:
+        src = SnapshotTable.create(
+            spark, os.path.join(base, "src"), schema=nation.schema
+        )
+        mirror = SnapshotTable.create(
+            spark, os.path.join(base, "mirror"), schema=nation.schema
+        )
 
-    # four commits: the changelog crosses append, COW-update (file-diff
-    # delete+insert pairs), MOR-delete (position delete files), append
-    sids = [src.append(nation)]
-    sids.append(src.update_where("n_regionkey = 1", {"n_name": "lower(n_name)"}))
-    sids.append(src.delete_where("n_regionkey = 3", mode="merge-on-read"))
-    sids.append(
-        src.append(
-            nation.filter("n_regionkey = 0").select(
-                (F.col("n_nationkey") + 100).alias("n_nationkey"),
-                F.concat(F.lit("new_"), F.lower("n_name")).alias("n_name"),
-                (F.col("n_regionkey") + 9).alias("n_regionkey"),
+        # four commits: the changelog crosses append, COW-update
+        # (file-diff delete+insert pairs), MOR-delete (position delete
+        # files), append
+        sids = [src.append(nation)]
+        sids.append(
+            src.update_where("n_regionkey = 1", {"n_name": "lower(n_name)"})
+        )
+        sids.append(src.delete_where("n_regionkey = 3", mode="merge-on-read"))
+        sids.append(
+            src.append(
+                nation.filter("n_regionkey = 0").select(
+                    (F.col("n_nationkey") + 100).alias("n_nationkey"),
+                    F.concat(F.lit("new_"), F.lower("n_name")).alias("n_name"),
+                    (F.col("n_regionkey") + 9).alias("n_regionkey"),
+                )
             )
         )
-    )
 
-    # one tick file per source commit; maxFilesPerTrigger=1 turns the
-    # backlog into one micro-batch per commit
-    _write_ticks_ordered(spark, tick_dir, sids)
+        def on_range(lo, hi):
+            changes = src.scan_changelog(lo, hi)
+            apply_changelog(changes, mirror, key_cols=["n_nationkey"])
 
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
-
-    def advance(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        # aggregate JVM-side: the max is one scalar back to the driver
-        # (VERDICT r6 #4 - never collect rows to reduce in Python)
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        changes = src.scan_changelog(state["cursor"], hi)
-        apply_changelog(changes, mirror, key_cols=["n_nationkey"])
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {"cursor": hi, "ranges": state["ranges"] + [[state["cursor"], hi]]},
-                f,
-            )
-
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(advance)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # distinct applied snapshot ranges, not a skip-sensitive batch counter
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
-    out = (
-        mirror.scan(virtual_column=None)
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
+        out = mirror.scan(virtual_column=None).withColumn(
+            "multi_batch", F.lit(bool(multi_batch))
+        )
+        return out.localCheckpoint()
 
 
 @query(
@@ -300,106 +345,65 @@ def stream_keyless_cdc(spark, sf_dir):
     in separate micro-batches. At 100 TB each batch is O(that commit's
     churn): the changelog is a file-level diff and the mirror write is
     an equality delete + append, never a table rewrite."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql.types import LongType, StructField, StructType
 
     from hiveberg_spark.catalog import load_table
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_keyless_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
-
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    src = SnapshotTable.create(
-        spark, os.path.join(base, "src"), schema=nation.schema
-    )
-    mirror = SnapshotTable.create(
-        spark,
-        os.path.join(base, "mirror"),
-        schema=StructType(
-            [StructField("_row_id", LongType(), True)]
-            + list(nation.schema.fields)
-        ),
-    )
+    with stream_workspace("hbs_keyless") as base:
+        src = SnapshotTable.create(
+            spark, os.path.join(base, "src"), schema=nation.schema
+        )
+        mirror = SnapshotTable.create(
+            spark,
+            os.path.join(base, "mirror"),
+            schema=StructType(
+                [StructField("_row_id", LongType(), True)]
+                + list(nation.schema.fields)
+            ),
+        )
 
-    # ordered single-file append => _row_id == n_nationkey; then a COW
-    # update (pre/post pairs carry ids through the rewrite), a MOR
-    # delete, and a fresh-block append
-    sids = [
-        src.append(nation.coalesce(1).sortWithinPartitions("n_nationkey"))
-    ]
-    sids.append(
-        src.update_where("n_regionkey = 1", {"n_name": "lower(n_name)"})
-    )
-    sids.append(src.delete_where("n_regionkey = 3", mode="merge-on-read"))
-    sids.append(
-        src.append(
-            nation.filter("n_regionkey = 0")
+        # ordered single-file append => _row_id == n_nationkey; then a
+        # COW update (pre/post pairs carry ids through the rewrite), a
+        # MOR delete, and a fresh-block append
+        sids = [
+            src.append(nation.coalesce(1).sortWithinPartitions("n_nationkey"))
+        ]
+        sids.append(
+            src.update_where("n_regionkey = 1", {"n_name": "lower(n_name)"})
+        )
+        sids.append(src.delete_where("n_regionkey = 3", mode="merge-on-read"))
+        sids.append(
+            src.append(
+                nation.filter("n_regionkey = 0")
+                .select(
+                    (F.col("n_nationkey") + 100).alias("n_nationkey"),
+                    F.concat(F.lit("new_"), F.lower("n_name")).alias("n_name"),
+                    (F.col("n_regionkey") + 9).alias("n_regionkey"),
+                )
+                .coalesce(1)
+                .sortWithinPartitions("n_nationkey")
+            )
+        )
+
+        def on_range(lo, hi):
+            changes = src.scan_changelog(
+                lo, hi, compute_updates=True, use_row_lineage=True
+            )
+            apply_changelog(changes, mirror, key_cols=["_row_id"])
+
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
+        out = (
+            mirror.scan(virtual_column=None)
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
             .select(
-                (F.col("n_nationkey") + 100).alias("n_nationkey"),
-                F.concat(F.lit("new_"), F.lower("n_name")).alias("n_name"),
-                (F.col("n_regionkey") + 9).alias("n_regionkey"),
+                "_row_id", "n_nationkey", "n_name", "n_regionkey", "multi_batch"
             )
-            .coalesce(1)
-            .sortWithinPartitions("n_nationkey")
         )
-    )
-
-    _write_ticks_ordered(spark, tick_dir, sids)
-
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
-
-    def advance(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        # aggregate JVM-side: the max is one scalar back to the driver
-        # (VERDICT r6 #4 - never collect rows to reduce in Python)
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        changes = src.scan_changelog(
-            state["cursor"], hi, compute_updates=True, use_row_lineage=True
-        )
-        apply_changelog(changes, mirror, key_cols=["_row_id"])
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {"cursor": hi, "ranges": state["ranges"] + [[state["cursor"], hi]]},
-                f,
-            )
-
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(advance)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # distinct applied snapshot ranges, not a skip-sensitive batch counter
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
-    out = (
-        mirror.scan(virtual_column=None)
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .select(
-            "_row_id", "n_nationkey", "n_name", "n_regionkey", "multi_batch"
-        )
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return out.localCheckpoint()
 
 
 @query(
@@ -427,11 +431,6 @@ def stream_rate_limited_source(spark, sf_dir):
     bumps a batch counter; `multi_batch` pins that the backlog really
     split, `start_excluded` that no pre-cursor row leaked. The final
     mirror aggregate equals the batch GROUP BY over snapshots 2-3."""
-    import json
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
     t = _ensure_fixture(spark, sf_dir)
@@ -451,54 +450,42 @@ def stream_rate_limited_source(spark, sf_dir):
         names[0] if len(names) == 1 else "{" + ",".join(names) + "}",
     )
 
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_ratelim_{tag}")
-    ckpt = os.path.join(base, "ckpt")
-    counter_path = os.path.join(base, "batches.json")
-    os.makedirs(base)
-    with open(counter_path, "w") as fh:
-        json.dump({"batches": 0}, fh)
-
     schema = t.schema()
-    mirror = SnapshotTable.create(
-        spark, os.path.join(base, "mirror"), schema=schema
-    )
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        mirror.append(batch_df)
-        state = json.load(open(counter_path))
-        state["batches"] += 1
-        with open(counter_path, "w") as fh:
-            json.dump(state, fh)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(path)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    batches = json.load(open(counter_path))["batches"]
-    got = mirror.scan(virtual_column=None)
-    min_key = got.agg(F.min("n_nationkey")).head()[0]
-    out = (
-        got.groupBy("n_regionkey")
-        .agg(
-            F.count("*").alias("n_nations"),
-            F.sum("n_nationkey").cast("long").alias("key_sum"),
+    with stream_workspace("hbs_ratelim") as base:
+        mirror = SnapshotTable.create(
+            spark, os.path.join(base, "mirror"), schema=schema
         )
-        .withColumn("multi_batch", F.lit(bool(batches > 1)))
-        .withColumn("start_excluded", F.lit(bool(min_key >= 8)))
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        n_batches = [0]
+
+        def sink(batch_df, batch_id):
+            if batch_df.isEmpty():
+                return
+            mirror.append(batch_df)
+            n_batches[0] += 1
+
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(path)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        got = mirror.scan(virtual_column=None)
+        min_key = got.agg(F.min("n_nationkey")).head()[0]
+        out = (
+            got.groupBy("n_regionkey")
+            .agg(
+                F.count("*").alias("n_nations"),
+                F.sum("n_nationkey").cast("long").alias("key_sum"),
+            )
+            .withColumn("multi_batch", F.lit(bool(n_batches[0] > 1)))
+            .withColumn("start_excluded", F.lit(bool(min_key >= 8)))
+        )
+        return out.localCheckpoint()
 
 
 @query(
@@ -521,63 +508,51 @@ def stream_mv_pipeline(spark, sf_dir):
     rollup must equal the batch GROUP BY over everything streamed, and
     `multi_batch` pins that more than one refresh actually happened
     (availableNow honors the per-trigger file cap)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from hiveberg_spark.operators.timetravel import _ensure_fixture
     from hiveberg_spark.sources.materialized import MaterializedAggregate
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
     src = _ensure_fixture(spark, sf_dir)  # append-only by construction
     schema = src.schema()
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_stream_mv_{tag}")
-    sink = SnapshotTable.create(spark, os.path.join(base, "sink"))
-    # seed snapshot so the MV can be created before the stream starts
-    sink.append(spark.createDataFrame([], schema))
-    mv = MaterializedAggregate.create(
-        spark,
-        os.path.join(base, "mv"),
-        sink,
-        ["n_regionkey"],
-        {"n_nations": ("count", ""), "key_max": ("max", "n_nationkey")},
-    )
-    n_batches = [0]
+    with stream_workspace("hbs_stream_mv") as base:
+        sink = SnapshotTable.create(spark, os.path.join(base, "sink"))
+        # seed snapshot so the MV can be created before the stream starts
+        sink.append(spark.createDataFrame([], schema))
+        mv = MaterializedAggregate.create(
+            spark,
+            os.path.join(base, "mv"),
+            sink,
+            ["n_regionkey"],
+            {"n_nations": ("count", ""), "key_max": ("max", "n_nationkey")},
+        )
+        n_batches = [0]
 
-    def commit_and_refresh(batch_df, batch_id):
-        sink.append(batch_df)
-        mv.refresh()
-        n_batches[0] += 1
+        def commit_and_refresh(batch_df, batch_id):
+            sink.append(batch_df)
+            mv.refresh()
+            n_batches[0] += 1
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(os.path.join(src.location, "data"))
-    )
-    q = (
-        raw.writeStream.foreachBatch(commit_and_refresh)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        mv.read()
-        .select(
+        raw = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(os.path.join(src.location, "data"))
+        )
+        q = (
+            raw.writeStream.foreachBatch(commit_and_refresh)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        out = mv.read().select(
             "n_regionkey",
             "n_nations",
             F.col("key_max").cast("long").alias("key_max"),
             F.lit(bool(n_batches[0] > 1)).alias("multi_batch"),
         )
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return out.localCheckpoint()
 
 
 @query(
@@ -662,24 +637,14 @@ def stream_ivf_refresh(spark, sf_dir):
     are SET-EQUAL to a from-scratch rebuild (both anti-join directions
     empty) — any drift in the incremental read, assignment, or index
     commits flips the row red."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.dedup import set_equality_match
     from hiveberg_spark.operators.simsearch import (
         _assign_nearest_centroid,
         _label_centroids,
         with_norm,
     )
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_ivfstream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
 
     e = load_table(spark, sf_dir, "embeddings")
     cents = _label_centroids(spark, sf_dir)
@@ -689,67 +654,35 @@ def stream_ivf_refresh(spark, sf_dir):
             F.col("cell").cast("int").alias("cell"), "vec_id"
         )
 
-    corpus = SnapshotTable.create(spark, os.path.join(base, "corpus"), schema=e.schema)
-    index = SnapshotTable.create(
-        spark, os.path.join(base, "index"), schema="cell int, vec_id long"
-    )
-    sids = [corpus.append(e.filter(F.col("vec_id") % 3 == r)) for r in range(3)]
+    with stream_workspace("hbs_ivfstream") as base:
+        corpus = SnapshotTable.create(
+            spark, os.path.join(base, "corpus"), schema=e.schema
+        )
+        index = SnapshotTable.create(
+            spark, os.path.join(base, "index"), schema="cell int, vec_id long"
+        )
+        sids = [
+            corpus.append(e.filter(F.col("vec_id") % 3 == r)) for r in range(3)
+        ]
 
-    _write_ticks_ordered(spark, tick_dir, sids)
+        def on_range(lo, hi):
+            index.append(assign(_appended(corpus, lo, hi)))
 
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
 
-    def refresh(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        if state["cursor"] == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(
-                state["cursor"], hi, virtual_column=None
-            )
-        index.append(assign(delta))
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {"cursor": hi, "ranges": state["ranges"] + [[state["cursor"], hi]]},
-                f,
-            )
-
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # distinct applied snapshot ranges, not a skip-sensitive batch counter
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
-
-    from hiveberg_spark.operators.dedup import set_equality_match
-
-    streamed = index.scan(virtual_column=None)
-    full = assign(corpus.scan(virtual_column=None))
-    # full-outer set audit (round 15): the full-corpus assignment
-    # evaluates ONCE — the old anti-join union ran it twice
-    match = set_equality_match(
-        full, streamed, ["cell", "vec_id"], "lists_match_full_rebuild"
-    )
-    out = (
-        streamed.agg(F.count("*").cast("long").alias("n_indexed"))
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .crossJoin(match)
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        streamed = index.scan(virtual_column=None)
+        full = assign(corpus.scan(virtual_column=None))
+        # full-outer set audit (round 15): the full-corpus assignment
+        # evaluates ONCE — the old anti-join union ran it twice
+        match = set_equality_match(
+            full, streamed, ["cell", "vec_id"], "lists_match_full_rebuild"
+        )
+        out = (
+            streamed.agg(F.count("*").cast("long").alias("n_indexed"))
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+            .crossJoin(match)
+        )
+        return out.localCheckpoint()
 
 
 def _stream_inc_dedup_oracle() -> str:
@@ -798,10 +731,6 @@ def stream_incremental_dedup(spark, sf_dir):
     structure, and two set-equality invariants vs a from-scratch
     rebuild of both state tables. Per micro-batch cost is O(delta +
     colliding postings) — the steady state never re-scans the corpus."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.caching import persist_tracked
     from hiveberg_spark.catalog import load_table
     from hiveberg_spark.operators.dedup import (
@@ -814,149 +743,110 @@ def stream_incremental_dedup(spark, sf_dir):
     )
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_dedupstream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = SnapshotTable.create(
-        spark, os.path.join(base, "corpus"), schema="doc_id long, text string"
-    )
-    hash_t = SnapshotTable.create(
-        spark,
-        os.path.join(base, "hashes"),
-        schema="content_hash string, keep_id long",
-    )
-    band_t = SnapshotTable.create(
-        spark,
-        os.path.join(base, "bands"),
-        schema="band int, band_hash long, doc_id long",
-    )
-    sids = [corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)]
-    _write_ticks_ordered(spark, tick_dir, sids)
+    with stream_workspace("hbs_dedupstream") as base:
+        corpus = SnapshotTable.create(
+            spark, os.path.join(base, "corpus"), schema="doc_id long, text string"
+        )
+        hash_t = SnapshotTable.create(
+            spark,
+            os.path.join(base, "hashes"),
+            schema="content_hash string, keep_id long",
+        )
+        band_t = SnapshotTable.create(
+            spark,
+            os.path.join(base, "bands"),
+            schema="band int, band_hash long, doc_id long",
+        )
+        sids = [
+            corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)
+        ]
 
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": [], "near": 0}, f)
+        def on_range(lo, hi):
+            """Apply one commit's delta; returns its verified near pairs."""
+            delta = _appended(corpus, lo, hi)
+            # exact tier: FCFS against the STORED hash state
+            stored = hash_t.scan(virtual_column=None).select("content_hash")
+            hashed = delta.select("doc_id", F.md5("text").alias("content_hash"))
+            hash_t.append(
+                hashed.join(stored, "content_hash", "left_anti")
+                .groupBy("content_hash")
+                .agg(F.min("doc_id").alias("keep_id"))
+            )
+            # near tier: refresh postings, then candidates with >=1 delta
+            # member (the delta-side join bounds the pair space)
+            bands_new = _band_rows(delta)
+            band_t.append(bands_new)
+            cands = (
+                bands_new.select(
+                    "band", "band_hash", F.col("doc_id").alias("doc_n")
+                )
+                .join(band_t.scan(virtual_column=None), ["band", "band_hash"])
+                .filter(F.col("doc_id") != F.col("doc_n"))
+                .select(
+                    F.least("doc_id", "doc_n").alias("doc_a"),
+                    F.greatest("doc_id", "doc_n").alias("doc_b"),
+                )
+                .distinct()
+            )
+            cand_ids = (
+                cands.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
+                .distinct()
+            )
+            seen = corpus.scan(snapshot_id=hi, virtual_column=None)
+            sh = shingled(
+                seen.join(cand_ids, "doc_id", "left_semi"), repartition=False
+            )
+            return _verified_pairs(cands, sh, JACCARD_THRESHOLD).count()
 
-    def refresh(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        if state["cursor"] == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(
-                state["cursor"], hi, virtual_column=None
-            )
-        # exact tier: FCFS against the STORED hash state
-        stored = hash_t.scan(virtual_column=None).select("content_hash")
-        hashed = delta.select("doc_id", F.md5("text").alias("content_hash"))
-        hash_t.append(
-            hashed.join(stored, "content_hash", "left_anti")
-            .groupBy("content_hash")
-            .agg(F.min("doc_id").alias("keep_id"))
-        )
-        # near tier: refresh postings, then candidates with >=1 delta
-        # member (the delta-side join bounds the pair space)
-        bands_new = _band_rows(delta)
-        band_t.append(bands_new)
-        cands = (
-            bands_new.select(
-                "band", "band_hash", F.col("doc_id").alias("doc_n")
-            )
-            .join(band_t.scan(virtual_column=None), ["band", "band_hash"])
-            .filter(F.col("doc_id") != F.col("doc_n"))
-            .select(
-                F.least("doc_id", "doc_n").alias("doc_a"),
-                F.greatest("doc_id", "doc_n").alias("doc_b"),
-            )
-            .distinct()
-        )
-        cand_ids = (
-            cands.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        seen = corpus.scan(snapshot_id=hi, virtual_column=None)
-        sh = shingled(
-            seen.join(cand_ids, "doc_id", "left_semi"), repartition=False
-        )
-        n_near = _verified_pairs(cands, sh, JACCARD_THRESHOLD).count()
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {
-                    "cursor": hi,
-                    "ranges": state["ranges"] + [[state["cursor"], hi]],
-                    "near": state["near"] + n_near,
-                },
-                f,
-            )
+        ranges = run_per_commit(spark, base, sids, on_range)
+        multi_batch = len(ranges) > 1
+        n_near = sum(v for _lo, _hi, v in ranges)
 
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = json.load(open(cursor_path))
-    multi_batch = len(state["ranges"]) > 1
-
-    full = corpus.scan(virtual_column=None)
-    n_docs = full.agg(F.count("*").cast("long").alias("n_docs_streamed"))
-    # FCFS exact-dup total = docs that did NOT create a state key
-    exact = n_docs.crossJoin(
-        hash_t.scan(virtual_column=None).agg(F.count("*").alias("_n_keys"))
-    ).select(
-        (F.col("n_docs_streamed") - F.col("_n_keys"))
-        .cast("long")
-        .alias("n_exact_dups_streamed")
-    )
-    # set-equality invariants vs a from-scratch rebuild of both tables
-    state_keys = hash_t.scan(virtual_column=None).select("content_hash")
-    full_keys = full.select(F.md5("text").alias("content_hash")).distinct()
-    # full-outer set audits (round 15): each side evaluates ONCE — the
-    # old anti-join union ran the md5 pass and the full shingle→minhash
-    # banding rebuild twice each (see dedup.set_equality_match)
-    hash_match = set_equality_match(
-        full_keys, state_keys, ["content_hash"], "hash_state_matches"
-    )
-    all_bands = band_t.scan(virtual_column=None)
-    full_bands = _band_rows_from_shingled(shingled(full))
-    band_cols = ["band", "band_hash", "doc_id"]
-    band_match = set_equality_match(
-        full_bands, all_bands.select(band_cols), band_cols,
-        "band_state_matches",
-    )
-    out = persist_tracked(
-        n_docs.crossJoin(exact)
-        .withColumn(
-            "n_near_pairs_streamed", F.lit(int(state["near"])).cast("long")
+        full = corpus.scan(virtual_column=None)
+        n_docs = full.agg(F.count("*").cast("long").alias("n_docs_streamed"))
+        # FCFS exact-dup total = docs that did NOT create a state key
+        exact = n_docs.crossJoin(
+            hash_t.scan(virtual_column=None).agg(F.count("*").alias("_n_keys"))
+        ).select(
+            (F.col("n_docs_streamed") - F.col("_n_keys"))
+            .cast("long")
+            .alias("n_exact_dups_streamed")
         )
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .crossJoin(hash_match)
-        .crossJoin(band_match)
-        .select(
-            "n_docs_streamed",
-            "n_exact_dups_streamed",
-            "n_near_pairs_streamed",
-            "multi_batch",
-            "hash_state_matches",
+        # set-equality invariants vs a from-scratch rebuild of both tables
+        state_keys = hash_t.scan(virtual_column=None).select("content_hash")
+        full_keys = full.select(F.md5("text").alias("content_hash")).distinct()
+        # full-outer set audits (round 15): each side evaluates ONCE — the
+        # old anti-join union ran the md5 pass and the full
+        # shingle→minhash banding rebuild twice each (see
+        # dedup.set_equality_match)
+        hash_match = set_equality_match(
+            full_keys, state_keys, ["content_hash"], "hash_state_matches"
+        )
+        all_bands = band_t.scan(virtual_column=None)
+        full_bands = _band_rows_from_shingled(shingled(full))
+        band_cols = ["band", "band_hash", "doc_id"]
+        band_match = set_equality_match(
+            full_bands, all_bands.select(band_cols), band_cols,
             "band_state_matches",
         )
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        out = persist_tracked(
+            n_docs.crossJoin(exact)
+            .withColumn("n_near_pairs_streamed", F.lit(int(n_near)).cast("long"))
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+            .crossJoin(hash_match)
+            .crossJoin(band_match)
+            .select(
+                "n_docs_streamed",
+                "n_exact_dups_streamed",
+                "n_near_pairs_streamed",
+                "multi_batch",
+                "hash_state_matches",
+                "band_state_matches",
+            )
+        )
+        return out.localCheckpoint()
 
 
 # -- streaming media ingest: decode-on-ingest feature extraction ----------------
@@ -1040,19 +930,9 @@ def stream_media_ingest(spark, sf_dir):
     full corpus (anti-joins both directions) — drift in the
     incremental read, the decoder, or the feature commits flips the
     row red."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.dedup import set_equality_match
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_mediastream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
 
     FEAT_SCHEMA = "doc_id long, peak long, n_samples long, duration_ms long"
 
@@ -1066,83 +946,48 @@ def stream_media_ingest(spark, sf_dir):
         .filter(F.col("doc_id") < _MEDIA_INGEST_CAP)
         .select("doc_id")
     )
-    corpus = SnapshotTable.create(
-        spark, os.path.join(base, "corpus"), schema="doc_id long"
-    )
-    feats = SnapshotTable.create(
-        spark, os.path.join(base, "features"), schema=FEAT_SCHEMA
-    )
-    sids = [corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)]
-    _write_ticks_ordered(spark, tick_dir, sids)
-
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
-
-    def ingest(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        if state["cursor"] == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(
-                state["cursor"], hi, virtual_column=None
-            )
-        feats.append(featurize(delta))
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {
-                    "cursor": hi,
-                    "ranges": state["ranges"] + [[state["cursor"], hi]],
-                },
-                f,
-            )
-
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
-
-    streamed = feats.scan(virtual_column=None)
-    full = featurize(corpus.scan(virtual_column=None))
-    from hiveberg_spark.operators.dedup import set_equality_match
-
-    cols = ["doc_id", "peak", "n_samples", "duration_ms"]
-    # full-outer set audit (round 15): the full-corpus media featurize
-    # (binary decode) evaluates ONCE — the old anti-join union ran it
-    # twice (see dedup.set_equality_match)
-    match = set_equality_match(
-        full, streamed, cols, "features_match_full_rebuild"
-    )
-    out = (
-        streamed.agg(
-            F.count("*").cast("long").alias("n_media"),
-            F.sum("peak").cast("long").alias("peak_sum"),
-            F.sum("duration_ms").cast("long").alias("duration_ms_sum"),
+    with stream_workspace("hbs_mediastream") as base:
+        corpus = SnapshotTable.create(
+            spark, os.path.join(base, "corpus"), schema="doc_id long"
         )
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .crossJoin(match)
-        .select(
-            "n_media",
-            "peak_sum",
-            "duration_ms_sum",
-            "multi_batch",
-            "features_match_full_rebuild",
+        feats = SnapshotTable.create(
+            spark, os.path.join(base, "features"), schema=FEAT_SCHEMA
         )
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        sids = [
+            corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)
+        ]
+
+        def on_range(lo, hi):
+            feats.append(featurize(_appended(corpus, lo, hi)))
+
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
+
+        streamed = feats.scan(virtual_column=None)
+        full = featurize(corpus.scan(virtual_column=None))
+        cols = ["doc_id", "peak", "n_samples", "duration_ms"]
+        # full-outer set audit (round 15): the full-corpus media
+        # featurize (binary decode) evaluates ONCE — the old anti-join
+        # union ran it twice (see dedup.set_equality_match)
+        match = set_equality_match(
+            full, streamed, cols, "features_match_full_rebuild"
+        )
+        out = (
+            streamed.agg(
+                F.count("*").cast("long").alias("n_media"),
+                F.sum("peak").cast("long").alias("peak_sum"),
+                F.sum("duration_ms").cast("long").alias("duration_ms_sum"),
+            )
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+            .crossJoin(match)
+            .select(
+                "n_media",
+                "peak_sum",
+                "duration_ms_sum",
+                "multi_batch",
+                "features_match_full_rebuild",
+            )
+        )
+        return out.localCheckpoint()
 
 
 # -- streaming weighted reservoir sample (A-Res over micro-batches) -------------
@@ -1181,20 +1026,10 @@ def stream_reservoir_sample(spark, sf_dir):
     merge flips the row red (membership pinned row-for-row, not just
     counts). `multi_batch` rides every row, pinning that the commits
     really arrived in separate micro-batches."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.catalog import load_table
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
     K = 100
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_aresstream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
 
     def keyed(df):
         u = (
@@ -1212,72 +1047,36 @@ def stream_reservoir_sample(spark, sf_dir):
         )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    corpus = SnapshotTable.create(
-        spark, os.path.join(base, "corpus"), schema="doc_id long, n_chars long"
-    )
-    reservoir = SnapshotTable.create(
-        spark,
-        os.path.join(base, "reservoir"),
-        schema="doc_id long, weight long, race_key double",
-    )
-    sids = [
-        corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)
-    ]
-    _write_ticks_ordered(spark, tick_dir, sids)
-
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
-
-    def maintain(batch_df, batch_id):
-        state = json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        if state["cursor"] == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(
-                state["cursor"], hi, virtual_column=None
-            )
-        merged = (
-            reservoir.scan(virtual_column=None)
-            .unionByName(keyed(delta))
-            .orderBy(F.asc("race_key"), F.asc("doc_id"))
-            .limit(K)
+    with stream_workspace("hbs_aresstream") as base:
+        corpus = SnapshotTable.create(
+            spark, os.path.join(base, "corpus"), schema="doc_id long, n_chars long"
         )
-        # limit() materializes K rows; overwrite commits the new state
-        reservoir.overwrite(merged.localCheckpoint())
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {
-                    "cursor": hi,
-                    "ranges": state["ranges"] + [[state["cursor"], hi]],
-                },
-                f,
+        reservoir = SnapshotTable.create(
+            spark,
+            os.path.join(base, "reservoir"),
+            schema="doc_id long, weight long, race_key double",
+        )
+        sids = [
+            corpus.append(d.filter(F.col("doc_id") % 3 == r)) for r in range(3)
+        ]
+
+        def on_range(lo, hi):
+            merged = (
+                reservoir.scan(virtual_column=None)
+                .unionByName(keyed(_appended(corpus, lo, hi)))
+                .orderBy(F.asc("race_key"), F.asc("doc_id"))
+                .limit(K)
             )
+            # limit() materializes K rows; overwrite commits the new state
+            reservoir.overwrite(merged.localCheckpoint())
 
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
-
-    out = (
-        reservoir.scan(virtual_column=None)
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .orderBy(F.asc("race_key"), F.asc("doc_id"))
-    )
-    out = out.localCheckpoint()  # materialize + CUT LINEAGE pre-rmtree (ADVICE r12)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
+        out = (
+            reservoir.scan(virtual_column=None)
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+            .orderBy(F.asc("race_key"), F.asc("doc_id"))
+        )
+        return out.localCheckpoint()
 
 
 # -- streaming benchmark decontamination (round 13) -----------------------------
@@ -1326,20 +1125,13 @@ def stream_decontaminate(spark, sf_dir):
     of the full corpus (anti-joins both directions over all three
     columns) — a dropped batch, double-applied delta, or screening
     drift flips it red."""
-    import shutil
-    import tempfile
-    import uuid
-
     from hiveberg_spark.caching import persist_tracked
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.dedup import set_equality_match
+    from hiveberg_spark.operators.pipeline_ops import (
+        decontaminate_ngram_overlap,
+    )
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_deconstream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
@@ -1363,121 +1155,73 @@ def stream_decontaminate(spark, sf_dir):
     eval_grams.count()  # materialize before the stream starts
 
     train = docs.filter(F.col("source") != DECON_EVAL_SOURCE)
-    corpus = SnapshotTable.create(
-        spark,
-        os.path.join(base, "corpus"),
-        schema="doc_id long, source string, text string",
-    )
-    flags_t = SnapshotTable.create(
-        spark,
-        os.path.join(base, "flags"),
-        schema="doc_id long, source string, contaminated boolean",
-    )
-    sids = [
-        corpus.append(train.filter(F.col("doc_id") % 3 == r)) for r in range(3)
-    ]
-    _write_ticks_ordered(spark, tick_dir, sids)
-
-    with open(cursor_path, "w") as f:
-        json.dump({"cursor": 0, "ranges": []}, f)
-
-    def refresh(batch_df, batch_id):
-        # Replay idempotency (ADVICE r13): the authoritative "has this
-        # tick been applied" record is the applied-sid marker stamped
-        # into the flag table's own snapshot summary ATOMICALLY with the
-        # append — a crash between the append and the cursor-file write
-        # can leave the cursor stale, and a cursor-only guard would then
-        # re-append the same delta on checkpointed replay (duplicate
-        # flag rows, set-equality audit red). The cursor file remains
-        # the ranges bookkeeping and is self-healed from the markers.
-        state = json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        applied = _applied_sids(flags_t)
-        cur = max([state["cursor"], *applied])
-        if hi <= cur:
-            if cur > state["cursor"]:
-                # append landed but its cursor write was lost: repair
-                with open(cursor_path, "w") as f:
-                    json.dump(
-                        {
-                            "cursor": cur,
-                            "ranges": state["ranges"]
-                            + [[state["cursor"], cur]],
-                        },
-                        f,
-                    )
-            return  # replayed tick: already applied
-        if cur == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(cur, hi, virtual_column=None)
-        dg = delta.select("doc_id", "source", F.explode(grams).alias("g"))
-        hit = (
-            dg.join(eval_grams, "g", "left_semi")
-            .select("doc_id")
-            .distinct()
-            .withColumn("hit", F.lit(True))
+    with stream_workspace("hbs_deconstream") as base:
+        corpus = SnapshotTable.create(
+            spark,
+            os.path.join(base, "corpus"),
+            schema="doc_id long, source string, text string",
         )
-        flags_t.append(
-            delta.join(hit, "doc_id", "left").select(
-                "doc_id",
-                "source",
-                F.coalesce("hit", F.lit(False)).alias("contaminated"),
-            ),
-            summary_extra={"applied-sid": str(hi)},
+        flags_t = SnapshotTable.create(
+            spark,
+            os.path.join(base, "flags"),
+            schema="doc_id long, source string, contaminated boolean",
         )
-        with open(cursor_path, "w") as f:
-            json.dump(
-                {
-                    "cursor": hi,
-                    "ranges": state["ranges"] + [[cur, hi]],
-                },
-                f,
+        sids = [
+            corpus.append(train.filter(F.col("doc_id") % 3 == r))
+            for r in range(3)
+        ]
+
+        def on_range(lo, hi):
+            # Replay idempotency (ADVICE r13): the authoritative "has
+            # this tick been applied" record is the applied-sid marker
+            # stamped into the flag table's own snapshot summary
+            # ATOMICALLY with the append. A crash between the append and
+            # the cursor write leaves the cursor stale, and a cursor-only
+            # guard would re-append the same delta on checkpointed replay
+            # (duplicate flag rows, set-equality audit red); returning
+            # here lets run_per_commit advance the cursor over it.
+            if hi in _applied_sids(flags_t):
+                return
+            delta = _appended(corpus, lo, hi)
+            dg = delta.select("doc_id", "source", F.explode(grams).alias("g"))
+            hit = (
+                dg.join(eval_grams, "g", "left_semi")
+                .select("doc_id")
+                .distinct()
+                .withColumn("hit", F.lit(True))
+            )
+            flags_t.append(
+                delta.join(hit, "doc_id", "left").select(
+                    "doc_id",
+                    "source",
+                    F.coalesce("hit", F.lit(False)).alias("contaminated"),
+                ),
+                summary_extra={"applied-sid": str(hi)},
             )
 
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    multi_batch = len(json.load(open(cursor_path))["ranges"]) > 1
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
 
-    flags = persist_tracked(flags_t.scan(virtual_column=None))
-    totals = flags.agg(
-        F.count("*").cast("long").alias("n_train_docs"),
-        F.sum(F.col("contaminated").cast("long"))
-        .cast("long")
-        .alias("n_contaminated"),
-    )
-    # set-equality audit vs a from-scratch batch decontamination
-    from hiveberg_spark.operators.pipeline_ops import (
-        decontaminate_ngram_overlap,
-    )
-
-    from hiveberg_spark.operators.dedup import set_equality_match
-
-    batch = decontaminate_ngram_overlap.__wrapped__(spark, sf_dir).select(
-        "doc_id", "source", "contaminated"
-    )
-    cols = ["doc_id", "source", "contaminated"]
-    # full-outer set audit (round 15): the batch decontamination
-    # pipeline evaluates ONCE — the old anti-join union ran it twice
-    match = set_equality_match(batch, flags, cols, "flags_match_batch")
-    out = (
-        totals.withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .crossJoin(match)
-        .select(
-            "n_train_docs", "n_contaminated", "multi_batch",
-            "flags_match_batch",
+        flags = persist_tracked(flags_t.scan(virtual_column=None))
+        totals = flags.agg(
+            F.count("*").cast("long").alias("n_train_docs"),
+            F.sum(F.col("contaminated").cast("long"))
+            .cast("long")
+            .alias("n_contaminated"),
         )
-    )
-    out = out.localCheckpoint()  # materialize + cut lineage pre-rmtree
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        # set-equality audit vs a from-scratch batch decontamination
+        batch = decontaminate_ngram_overlap.__wrapped__(spark, sf_dir).select(
+            "doc_id", "source", "contaminated"
+        )
+        cols = ["doc_id", "source", "contaminated"]
+        # full-outer set audit (round 15): the batch decontamination
+        # pipeline evaluates ONCE — the old anti-join union ran it twice
+        match = set_equality_match(batch, flags, cols, "flags_match_batch")
+        out = (
+            totals.withColumn("multi_batch", F.lit(bool(multi_batch)))
+            .crossJoin(match)
+            .select(
+                "n_train_docs", "n_contaminated", "multi_batch",
+                "flags_match_batch",
+            )
+        )
+        return out.localCheckpoint()

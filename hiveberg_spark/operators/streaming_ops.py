@@ -426,42 +426,33 @@ def stream_sink_snapshot_table(spark, sf_dir):
     one batch → exactly one snapshot. (The reference never writes —
     IcebergSerDe.java:77-80; this is the write path it lacked.)"""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    # unique per invocation: the sink is rebuilt every run, and a shared
-    # path would race under concurrent driver processes
-    tag = uuid.uuid4().hex[:10]
-    loc = os.path.join(tempfile.gettempdir(), f"hbs_stream_sink_{tag}")
-    shutil.rmtree(loc, ignore_errors=True)
-    table = SnapshotTable.create(spark, loc)
-
-    def commit_batch(batch_df, batch_id):
-        table.append(batch_df)
 
     s = events_stream(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
-    q = (
-        s.writeStream.foreachBatch(commit_batch)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"hbs_sink_ckpt_{tag}"),
+    # the sink table and its checkpoint share one workspace, removed
+    # even when the stream raises; the result is driver-built, so
+    # nothing returned reads from it
+    with stream_workspace("hbs_stream_sink") as base:
+        loc = os.path.join(base, "table")
+        table = SnapshotTable.create(spark, loc)
+
+        def commit_batch(batch_df, batch_id):
+            table.append(batch_df)
+
+        q = (
+            s.writeStream.foreachBatch(commit_batch)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(
-        os.path.join(tempfile.gettempdir(), f"hbs_sink_ckpt_{tag}"),
-        ignore_errors=True,
-    )
-    back = SnapshotTable.load(spark, loc)
-    n_rows = back.scan(virtual_column=None).count()
-    n_snaps = back.snapshots().count()
+        q.awaitTermination()
+        back = SnapshotTable.load(spark, loc)
+        n_rows = back.scan(virtual_column=None).count()
+        n_snaps = back.snapshots().count()
     return spark.createDataFrame(
         [(n_rows, n_snaps)], "n_rows long, n_snapshots long"
     )

@@ -1423,100 +1423,78 @@ def text_bm25_stream_refresh(spark, sf_dir):
     the fresh full-corpus BM25 ranking plus `multi_batch` pinning that
     the commits really arrived as separate micro-batches (derived from
     applied snapshot RANGES, not a skip-sensitive counter)."""
-    import json as _json
     import os
-    import shutil
-    import tempfile
-    import uuid
 
-    from hiveberg_spark.operators.snapshot_stream import _write_ticks_ordered
+    from hiveberg_spark.operators.snapshot_stream import (
+        _appended,
+        run_per_commit,
+        stream_workspace,
+    )
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_bm25stream_{tag}")
-    tick_dir = os.path.join(base, "ticks")
-    ckpt = os.path.join(base, "ckpt")
-    cursor_path = os.path.join(base, "cursor.json")
-    os.makedirs(tick_dir)
-
-    corpus = SnapshotTable.create(spark, os.path.join(base, "corpus"), schema=docs.schema)
-    post_t = SnapshotTable.create(
-        spark, os.path.join(base, "postings"), schema="doc_id long, w string, tf long"
-    )
-    len_t = SnapshotTable.create(
-        spark, os.path.join(base, "lengths"), schema="doc_id long, len long"
-    )
-    sids = [corpus.append(docs.filter(F.col("doc_id") % 3 == r)) for r in range(3)]
-    _write_ticks_ordered(spark, tick_dir, sids)
-
-    with open(cursor_path, "w") as f:
-        _json.dump({"cursor": 0, "ranges": []}, f)
-
-    def refresh(batch_df, batch_id):
-        state = _json.load(open(cursor_path))
-        hi = batch_df.agg(F.max("sid")).first()[0]
-        if hi <= state["cursor"]:
-            return  # replayed tick after restart: already applied
-        if state["cursor"] == 0:
-            delta = corpus.scan(snapshot_id=hi, virtual_column=None)
-        else:
-            delta = corpus.scan_changes(state["cursor"], hi, virtual_column=None)
-        toks = delta.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        post_t.append(
-            toks.groupBy("doc_id", "w").agg(F.count("*").cast("long").alias("tf"))
+    with stream_workspace("hbs_bm25stream") as base:
+        corpus = SnapshotTable.create(
+            spark, os.path.join(base, "corpus"), schema=docs.schema
         )
-        len_t.append(
-            toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("len"))
+        post_t = SnapshotTable.create(
+            spark,
+            os.path.join(base, "postings"),
+            schema="doc_id long, w string, tf long",
         )
-        with open(cursor_path, "w") as f:
-            _json.dump(
-                {"cursor": hi, "ranges": state["ranges"] + [[state["cursor"], hi]]},
-                f,
+        len_t = SnapshotTable.create(
+            spark, os.path.join(base, "lengths"), schema="doc_id long, len long"
+        )
+        sids = [
+            corpus.append(docs.filter(F.col("doc_id") % 3 == r))
+            for r in range(3)
+        ]
+
+        def on_range(lo, hi):
+            delta = _appended(corpus, lo, hi)
+            toks = delta.select(
+                "doc_id", F.explode(F.split("text", " ")).alias("w")
+            )
+            post_t.append(
+                toks.groupBy("doc_id", "w").agg(
+                    F.count("*").cast("long").alias("tf")
+                )
+            )
+            len_t.append(
+                toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("len"))
             )
 
-    q = (
-        spark.readStream.schema("sid long")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(tick_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    multi_batch = len(_json.load(open(cursor_path))["ranges"]) > 1
+        multi_batch = len(run_per_commit(spark, base, sids, on_range)) > 1
 
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    tf = (
-        post_t.scan(virtual_column=None)
-        .filter(F.expr(f"w IN ({terms})"))
-        .select("doc_id", "w", "tf")
-    )
-    dl = len_t.scan(virtual_column=None)
-    stats = dl.agg(F.count("*").alias("n_docs"), F.avg("len").alias("avgdl"))
-    df_ = tf.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
-    k1, b = _BM25_K1, _BM25_B
-    idf = F.log(
-        ((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)) + 1
-    )
-    denom = F.col("tf") + k1 * ((1 - b) + b * F.col("len") / F.col("avgdl"))
-    out = (
-        tf.join(F.broadcast(df_), "w")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(idf * F.col("tf") * (k1 + 1) / denom), 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(20)
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-        .persist()
-    )
-    out.count()  # materialize before the temp dirs are removed
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
+        tf = (
+            post_t.scan(virtual_column=None)
+            .filter(F.expr(f"w IN ({terms})"))
+            .select("doc_id", "w", "tf")
+        )
+        dl = len_t.scan(virtual_column=None)
+        stats = dl.agg(F.count("*").alias("n_docs"), F.avg("len").alias("avgdl"))
+        df_ = tf.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
+        k1, b = _BM25_K1, _BM25_B
+        idf = F.log(
+            ((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)) + 1
+        )
+        denom = F.col("tf") + k1 * ((1 - b) + b * F.col("len") / F.col("avgdl"))
+        out = (
+            tf.join(F.broadcast(df_), "w")
+            .join(dl, "doc_id")
+            .crossJoin(F.broadcast(stats))
+            .groupBy("doc_id")
+            .agg(
+                F.round(F.sum(idf * F.col("tf") * (k1 + 1) / denom), 6).alias(
+                    "bm25"
+                )
+            )
+            .orderBy(F.desc("bm25"), "doc_id")
+            .limit(20)
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+        )
+        return out.localCheckpoint()
 
 
 # -- tokenizer fertility / bytes-per-token audit (round 9) --------------------

@@ -1,6 +1,6 @@
 """Unit invariants for the round-8 operators (beyond their oracle
-parity rows): OPQ rotation properties, ordered streaming ticks, and the
-exact-integer round-half-away division discipline."""
+parity rows): OPQ rotation properties and the exact-integer
+round-half-away division discipline."""
 
 from __future__ import annotations
 
@@ -47,34 +47,6 @@ def test_exact_integer_round_half_away_matches_float_rounding():
     # beyond float precision: 2^64 + 1 over 2 — floats cannot see the +1
     a, b = 2**64 + 1, 2
     assert (2 * a + b) // (2 * b) == 2**63 + 1  # round-half-up of a/b
-
-
-def test_write_ticks_ordered_mtimes_strictly_increase(spark, tmp_path):
-    from hiveberg_spark.operators.snapshot_stream import _write_ticks_ordered
-
-    tick_dir = str(tmp_path / "ticks")
-    os.makedirs(tick_dir)
-    _write_ticks_ordered(spark, tick_dir, [11, 12, 13])
-    per_tick = []
-    for sid in (11, 12, 13):
-        # round 15: ticks are driver-written flat parquet files (the
-        # old layout was a directory per tick); accept either — the
-        # contract under test is the strict mtime ordering
-        tick = os.path.join(tick_dir, f"tick_{sid}")
-        candidates = [tick, tick + ".parquet"]
-        mts = []
-        for c in candidates:
-            if os.path.isfile(c):
-                mts.append(os.path.getmtime(c))
-            elif os.path.isdir(c):
-                for root, _d, files in os.walk(c):
-                    mts.extend(
-                        os.path.getmtime(os.path.join(root, f))
-                        for f in files
-                    )
-        assert mts, f"tick_{sid} wrote no files"
-        per_tick.append(max(mts))
-    assert per_tick[0] < per_tick[1] < per_tick[2], per_tick
 
 
 def test_bbit_estimator_on_real_signatures(spark):
