@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from hiveberg_spark.catalog import load_table
 from hiveberg_spark.registry import query
+from hiveberg_spark.session import conf_override
 
 
 @query(
@@ -269,7 +270,6 @@ def join_bucketed_colocate(spark, sf_dir):
     li_name, o_name = f"li_bkt_{tag}", f"ord_bkt_{tag}"
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy(
             "l_orderkey"
@@ -278,26 +278,24 @@ def join_bucketed_colocate(spark, sf_dir):
             "o_orderkey"
         ).saveAsTable(o_name)
         a, b = spark.table(li_name), spark.table(o_name)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = a.hint("merge").join(b, a.l_orderkey == b.o_orderkey)
-        no_exchange = "Exchange" not in explain_str(joined, "simple")
-        out = (
-            joined.groupBy("o_orderpriority")
-            .agg(
-                F.count("*").cast("long").alias("n_items"),
-                F.sum(F.col("l_quantity").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("sum_qty"),
+        with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+            joined = a.hint("merge").join(b, a.l_orderkey == b.o_orderkey)
+            no_exchange = "Exchange" not in explain_str(joined, "simple")
+            return (
+                joined.groupBy("o_orderpriority")
+                .agg(
+                    F.count("*").cast("long").alias("n_items"),
+                    F.sum(F.col("l_quantity").cast("decimal(18,6)"))
+                    .cast("double")
+                    .alias("sum_qty"),
+                )
+                .withColumn("colocated_no_exchange", F.lit(bool(no_exchange)))
+                # eager localCheckpoint severs lineage from the catalog
+                # tables: DROP TABLE below cascades cache invalidation, so
+                # a plain persist would recompute against deleted files
+                .localCheckpoint()
             )
-            .withColumn("colocated_no_exchange", F.lit(bool(no_exchange)))
-            # eager localCheckpoint severs lineage from the catalog
-            # tables: DROP TABLE below cascades cache invalidation, so a
-            # plain persist would recompute against deleted files
-            .localCheckpoint()
-        )
-        return out
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql(f"DROP TABLE IF EXISTS {li_name}")
         spark.sql(f"DROP TABLE IF EXISTS {o_name}")
 

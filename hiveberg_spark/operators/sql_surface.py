@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 
 from hiveberg_spark.registry import query
+from hiveberg_spark.session import conf_override
 from hiveberg_spark.operators.timetravel import (
     _commit_ts,
     _ensure_fixture,
@@ -2256,15 +2257,10 @@ def snapshot_table_properties(spark, sf_dir):
         )
         # AQE would coalesce a small-SF commit to one file, hiding the
         # disjoint-range effect; pin it off for the build only
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        try:
+        with conf_override(
+            spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"
+        ):
             table.append(li.repartition(8))
-        finally:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled", "true"
-            )
         table.delete_where("l_orderkey < 100")  # property → merge-on-read
 
     with _lock:
@@ -2416,15 +2412,10 @@ def snapshot_zorder_table(spark, sf_dir):
                 "write.distribution.mode": "range",
             }
         )
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        try:
+        with conf_override(
+            spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"
+        ):
             table.append(li.repartition(8))
-        finally:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.enabled", "true"
-            )
 
     with _lock:
         t = build_once(spark, loc, builder)

@@ -227,103 +227,6 @@ def stream_stateful_user_stats(spark, sf_dir):
     )
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas (Spark 4's successor to
-    applyInPandasWithState) speaks protobuf to its JVM state server
-    (pyspark/sql/streaming/proto/StateMessage_pb2.py); the google.protobuf
-    package does not ship in this environment, so the driver worker
-    crashes at init (verified: ImportError in
-    transform_with_state_driver_worker.py). The query registers the
-    moment protobuf is importable — the implementation below is
-    complete; applyInPandasWithState covers the arbitrary-state surface
-    meanwhile (stream_stateful_user_stats)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-_TWS_ORACLE = """
-    SELECT event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS total_value
-    FROM events GROUP BY event_type
-    """
-
-
-def stream_transform_with_state(spark, sf_dir):
-    """transformWithStateInPandas — Spark 4's arbitrary-state API (the
-    successor to applyInPandasWithState): typed per-key ValueState,
-    explicit StatefulProcessor lifecycle, RocksDB-backed state store.
-    Running per-event-type count + decimal-exact value total; with the
-    availableNow replay the final emitted row per key equals the batch
-    aggregate. Registration gated on protobuf (see _tws_available)."""
-    import decimal
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n long, total decimal(30,6)"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._state.get() if self._state.exists() else (0, decimal.Decimal(0))
-            )
-            total = decimal.Decimal(total)
-            for pdf in rows:
-                n += len(pdf)
-                # decimal-exact accumulation: value arrives as float but
-                # each addend is quantized once, matching the SQL oracle's
-                # DECIMAL(30,6) sum
-                for v in pdf["value"]:
-                    total += decimal.Decimal(str(round(float(v), 6)))
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"event_type": [key[0]], "n_events": [n], "total_value": [float(total)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        s = events_stream(spark, sf_dir).select("event_type", "value")
-        stats = s.groupBy("event_type").transformWithStateInPandas(
-            TypeStats(),
-            outputStructType="event_type string, n_events long, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = run_to_memory(stats, output_mode="update", name="transform_with_state")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    # update-mode sink may emit per micro-batch; keep the final row per key
-    return out.groupBy("event_type").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("total_value").alias("total_value"),
-    )
-
-
-if _tws_available():  # pragma: no cover - protobuf absent in this env
-    stream_transform_with_state = query(
-        "stream_transform_with_state", oracle=_TWS_ORACLE
-    )(stream_transform_with_state)
-
-
 @query(
     "stream_stream_join",
     oracle="""
@@ -485,83 +388,75 @@ def stream_upsert_sink(spark, sf_dir):
     bytes; scan-side cost is one anti-join against the key set, bounded
     by rewrite_position_deletes/compact."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import Window
 
-    from hiveberg_spark.sources.snapshot_table import SnapshotTable
-    from hiveberg_spark.streaming.events import events_stream
-
-    tag = uuid.uuid4().hex[:10]
-    src_dir = os.path.join(tempfile.gettempdir(), f"hbs_upsert_src_{tag}")
-    loc = os.path.join(tempfile.gettempdir(), f"hbs_upsert_tbl_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"hbs_upsert_ckpt_{tag}")
-    # split the backlog into 3 files so availableNow +
-    # maxFilesPerTrigger=1 yields real successive micro-batches
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
+    from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    events.repartition(3).write.mode("overwrite").parquet(src_dir)
-
     cols = "user_id long, event_id long, ts_us long, event_type string, value double"
-    table = SnapshotTable.create(spark, loc, schema=cols)
-    table.append(spark.createDataFrame([], cols))  # seed empty snapshot
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts_us").desc(), F.col("event_id").desc()
     )
+    with stream_workspace("hbs_upsert") as base:
+        src_dir = os.path.join(base, "src")
+        loc = os.path.join(base, "tbl")
+        # split the backlog into 3 files so availableNow +
+        # maxFilesPerTrigger=1 yields real successive micro-batches
+        events.repartition(3).write.mode("overwrite").parquet(src_dir)
+        table = SnapshotTable.create(spark, loc, schema=cols)
+        table.append(spark.createDataFrame([], cols))  # seed empty snapshot
 
-    def commit_batch(batch_df, batch_id):
-        cand = (
-            batch_df.withColumn("ts_us", F.unix_micros("ts"))
-            .select("user_id", "event_id", "ts_us", "event_type", "value")
-            .withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .drop("rn")
-        )
-        if cand.isEmpty():
-            return
-        users = cand.select("user_id").distinct()
-        current = table.scan(virtual_column=None).join(
-            users, "user_id", "left_semi"
-        )
-        winners = (
-            current.unionByName(cand)
-            .withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .drop("rn")
-        )
-        table.delete_by_keys(users)
-        table.append(winners)
+        def commit_batch(batch_df, batch_id):
+            cand = (
+                batch_df.withColumn("ts_us", F.unix_micros("ts"))
+                .select("user_id", "event_id", "ts_us", "event_type", "value")
+                .withColumn("rn", F.row_number().over(w))
+                .filter("rn = 1")
+                .drop("rn")
+            )
+            if cand.isEmpty():
+                return
+            users = cand.select("user_id").distinct()
+            current = table.scan(virtual_column=None).join(
+                users, "user_id", "left_semi"
+            )
+            winners = (
+                current.unionByName(cand)
+                .withColumn("rn", F.row_number().over(w))
+                .filter("rn = 1")
+                .drop("rn")
+            )
+            table.delete_by_keys(users)
+            table.append(winners)
 
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(src_dir)
-    )
-    # normalize ts exactly like events_stream does for ntz fixtures
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        stream.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src_dir, ignore_errors=True)
-    # > 3 snapshots == more than one upserting batch actually committed
-    multi_batch = SnapshotTable.load(spark, loc).snapshots().count() > 3
-    return (
-        table.scan(virtual_column=None)
-        .select("user_id", "event_type", "value")
-        .withColumn("multi_batch", F.lit(bool(multi_batch)))
-    )
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(src_dir)
+        )
+        # normalize ts exactly like events_stream does for ntz fixtures
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        q = (
+            stream.writeStream.foreachBatch(commit_batch)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # > 3 snapshots == more than one upserting batch actually committed
+        multi_batch = SnapshotTable.load(spark, loc).snapshots().count() > 3
+        out = (
+            table.scan(virtual_column=None)
+            .select("user_id", "event_type", "value")
+            .withColumn("multi_batch", F.lit(bool(multi_batch)))
+        )
+        return out.localCheckpoint()
 
 
 @query(
@@ -594,18 +489,10 @@ def stream_scd_enrichment(spark, sf_dir):
     ingest-with-SCD shape, on this repo's own table format end to
     end."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
-
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_scd_{tag}")
-    src_dir = os.path.join(base, "src")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(src_dir)
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type"
@@ -615,60 +502,60 @@ def stream_scd_enrichment(spark, sf_dir):
             F.floor((F.min("event_id") + F.max("event_id")) / 2.0)
         ).head()[0]
     )
-
-    dim = SnapshotTable.create(
-        spark, os.path.join(base, "dim"), schema="k int, dim_generation string"
-    )
-    dim.append(spark.createDataFrame([(1, "gen1")], "k int, dim_generation string"))
-    result = SnapshotTable.create(
-        spark,
-        os.path.join(base, "out"),
-        schema="event_id long, event_type string, dim_generation string",
-    )
-
-    def run_once():
-        def enrich(batch_df, batch_id):
-            d = dim.scan(virtual_column=None)  # CURRENT dimension state
-            result.append(
-                batch_df.crossJoin(d.select("dim_generation")).select(
-                    "event_id", "event_type", "dim_generation"
-                )
-            )
-
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("recursiveFileLookup", "true")
-            .format("parquet")
-            .load(src_dir)
-            .writeStream.foreachBatch(enrich)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    with stream_workspace("hbs_scd") as base:
+        src_dir = os.path.join(base, "src")
+        dim = SnapshotTable.create(
+            spark, os.path.join(base, "dim"), schema="k int, dim_generation string"
         )
-        q.awaitTermination()
+        dim.append(
+            spark.createDataFrame([(1, "gen1")], "k int, dim_generation string")
+        )
+        result = SnapshotTable.create(
+            spark,
+            os.path.join(base, "out"),
+            schema="event_id long, event_type string, dim_generation string",
+        )
 
-    # run 1: only the first half of the backlog exists
-    events.filter(F.col("event_id") <= mid).write.parquet(
-        os.path.join(src_dir, "half1")
-    )
-    run_once()
-    # the dimension changes between pipeline runs (SCD type-1 update)
-    dim.update_where("k = 1", {"dim_generation": "'gen2'"})
-    # run 2: the second half arrives; the shared checkpoint ensures
-    # half1 files are NOT reprocessed
-    events.filter(F.col("event_id") > mid).write.parquet(
-        os.path.join(src_dir, "half2")
-    )
-    run_once()
-    out = (
-        result.scan(virtual_column=None)
-        .groupBy("event_type", "dim_generation")
-        .agg(F.count("*").cast("long").alias("n_events"))
-    )
-    out = out.persist()
-    out.count()  # materialize before the temp dirs could be cleaned
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        def run_once():
+            def enrich(batch_df, batch_id):
+                d = dim.scan(virtual_column=None)  # CURRENT dimension state
+                result.append(
+                    batch_df.crossJoin(d.select("dim_generation")).select(
+                        "event_id", "event_type", "dim_generation"
+                    )
+                )
+
+            q = (
+                spark.readStream.schema(events.schema)
+                .option("recursiveFileLookup", "true")
+                .format("parquet")
+                .load(src_dir)
+                .writeStream.foreachBatch(enrich)
+                .option("checkpointLocation", os.path.join(base, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        # run 1: only the first half of the backlog exists
+        events.filter(F.col("event_id") <= mid).write.parquet(
+            os.path.join(src_dir, "half1")
+        )
+        run_once()
+        # the dimension changes between pipeline runs (SCD type-1 update)
+        dim.update_where("k = 1", {"dim_generation": "'gen2'"})
+        # run 2: the second half arrives; the shared checkpoint ensures
+        # half1 files are NOT reprocessed
+        events.filter(F.col("event_id") > mid).write.parquet(
+            os.path.join(src_dir, "half2")
+        )
+        run_once()
+        out = (
+            result.scan(virtual_column=None)
+            .groupBy("event_type", "dim_generation")
+            .agg(F.count("*").cast("long").alias("n_events"))
+        )
+        return out.localCheckpoint()
 
 
 @query(
@@ -692,59 +579,53 @@ def stream_branch_wap(spark, sf_dir):
     event was already committed on the branch; the publish is one
     metadata pointer move regardless of ingest size."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
     from hiveberg_spark.sources.snapshot_table import SnapshotTable
 
-    tag = uuid.uuid4().hex[:10]
-    base = os.path.join(tempfile.gettempdir(), f"hbs_streamwap_{tag}")
     schema = "event_id long, user_id long, event_type string, value double"
-    table = SnapshotTable.create(spark, os.path.join(base, "t"), schema=schema)
-    # branches fork from a snapshot: seed main with an empty initial
-    # commit (the usual state of a table provisioned before its first
-    # ingest window)
-    table.append(spark.createDataFrame([], schema))
-    table.create_branch("audit")
+    with stream_workspace("hbs_streamwap") as base:
+        table = SnapshotTable.create(spark, os.path.join(base, "t"), schema=schema)
+        # branches fork from a snapshot: seed main with an empty initial
+        # commit (the usual state of a table provisioned before its first
+        # ingest window)
+        table.append(spark.createDataFrame([], schema))
+        table.create_branch("audit")
 
-    def commit_batch(batch_df, batch_id):
-        table.append(batch_df, branch="audit")
+        def commit_batch(batch_df, batch_id):
+            table.append(batch_df, branch="audit")
 
-    q = (
-        events_stream(spark, sf_dir)
-        .select("event_id", "user_id", "event_type", "value")
-        .writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_main_during = table.scan(virtual_column=None).count()
-    staged = table.scan(ref="audit", virtual_column=None)
-    n_staged = staged.count()
-    audit_passed = (
-        n_staged > 0 and staged.filter(F.col("event_id").isNull()).count() == 0
-    )
-    if audit_passed:  # the gate: publish ONLY what passed
-        table.fast_forward("audit")
-    out = (
-        table.scan(virtual_column=None)
-        .agg(F.count("*").alias("n_main_after_publish"))
-        .withColumn("n_main_during_ingest", F.lit(int(n_main_during)).cast("long"))
-        .withColumn("n_branch_staged", F.lit(int(n_staged)).cast("long"))
-        .withColumn("audit_passed", F.lit(bool(audit_passed)))
-        .select(
-            "n_main_during_ingest",
-            "n_branch_staged",
-            "audit_passed",
-            "n_main_after_publish",
+        q = (
+            events_stream(spark, sf_dir)
+            .select("event_id", "user_id", "event_type", "value")
+            .writeStream.foreachBatch(commit_batch)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-        .persist()
-    )
-    out.count()  # materialize before the temp dirs are removed
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        q.awaitTermination()
+        n_main_during = table.scan(virtual_column=None).count()
+        staged = table.scan(ref="audit", virtual_column=None)
+        n_staged = staged.count()
+        audit_passed = (
+            n_staged > 0 and staged.filter(F.col("event_id").isNull()).count() == 0
+        )
+        if audit_passed:  # the gate: publish ONLY what passed
+            table.fast_forward("audit")
+        out = (
+            table.scan(virtual_column=None)
+            .agg(F.count("*").alias("n_main_after_publish"))
+            .withColumn("n_main_during_ingest", F.lit(int(n_main_during)).cast("long"))
+            .withColumn("n_branch_staged", F.lit(int(n_staged)).cast("long"))
+            .withColumn("audit_passed", F.lit(bool(audit_passed)))
+            .select(
+                "n_main_during_ingest",
+                "n_branch_staged",
+                "audit_passed",
+                "n_main_after_publish",
+            )
+        )
+        return out.localCheckpoint()
 
 
 # -- streaming bot-rate monitor (round 9) -----------------------------------------
@@ -800,9 +681,8 @@ def stream_bot_rate_monitor(spark, sf_dir):
     MAX(n) per user, and hourly counts only grow, so the latest update
     always wins."""
     import os
-    import tempfile
-    import uuid as _uuid
 
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
     from hiveberg_spark.streaming.events import (
         _SCHEMA_TS_LTZ,
         _SCHEMA_TS_NANOS_LONG,
@@ -811,14 +691,6 @@ def stream_bot_rate_monitor(spark, sf_dir):
     )
 
     kind = _fixture_ts_kind(sf_dir)
-    d = os.path.join(
-        tempfile.gettempdir(), f"hbs_botstream_{_uuid.uuid4().hex[:10]}"
-    )
-    os.makedirs(d)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(d, "events.parquet"),
-    )
     base = F.to_timestamp(F.lit("2024-01-01 00:00:00"))
     bots = (
         spark.range(_SBOT_USERS)
@@ -843,32 +715,39 @@ def stream_bot_rate_monitor(spark, sf_dir):
         bots = bots.withColumn("ts", F.unix_micros("ts") * F.lit(1000))
     elif kind == "ntz":
         bots = bots.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    bots.coalesce(1).write.parquet(os.path.join(d, "bots.parquet"))
-    schema = {
-        "nanos": _SCHEMA_TS_NANOS_LONG,
-        "ntz": _SCHEMA_TS_NTZ,
-        "ltz": _SCHEMA_TS_LTZ,
-    }[kind]
-    raw = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .format("parquet")
-        .load(d)
-    )
-    if kind == "nanos":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif kind == "ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    hourly = (
-        raw.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"), "user_id")
-        .agg(F.count("*").alias("n"))
-    )
-    out = run_to_memory(hourly, output_mode="update", name=None)
-    return out.groupBy("user_id").agg(
-        F.max("n").alias("max_hourly"),
-        (F.max("n") > _SBOT_HOURLY).alias("is_bot"),
-    )
+    # the landing dir goes away on return or raise; the memory-sink
+    # result reads nothing from it
+    with stream_workspace("hbs_botstream") as d:
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(d, "events.parquet"),
+        )
+        bots.coalesce(1).write.parquet(os.path.join(d, "bots.parquet"))
+        schema = {
+            "nanos": _SCHEMA_TS_NANOS_LONG,
+            "ntz": _SCHEMA_TS_NTZ,
+            "ltz": _SCHEMA_TS_LTZ,
+        }[kind]
+        raw = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .format("parquet")
+            .load(d)
+        )
+        if kind == "nanos":
+            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif kind == "ntz":
+            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        hourly = (
+            raw.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"), "user_id")
+            .agg(F.count("*").alias("n"))
+        )
+        out = run_to_memory(hourly, output_mode="update", name=None)
+        return out.groupBy("user_id").agg(
+            F.max("n").alias("max_hourly"),
+            (F.max("n") > _SBOT_HOURLY).alias("is_bot"),
+        )
 
 
 # -- watermark late-data policy audit (round 10) ------------------------------------
@@ -916,10 +795,9 @@ def stream_late_data_policy(spark, sf_dir):
     scale this audit tells an ingest owner what their lateness SLO
     actually loses."""
     import os
-    import tempfile
-    import uuid as _uuid
 
     from hiveberg_spark.catalog import load_table
+    from hiveberg_spark.operators.snapshot_stream import stream_workspace
     from hiveberg_spark.streaming.events import (
         _SCHEMA_TS_LTZ,
         _SCHEMA_TS_NANOS_LONG,
@@ -930,14 +808,6 @@ def stream_late_data_policy(spark, sf_dir):
     import time as _time
 
     kind = _fixture_ts_kind(sf_dir)
-    d = os.path.join(
-        tempfile.gettempdir(), f"hbs_latestream_{_uuid.uuid4().hex[:10]}"
-    )
-    os.makedirs(d)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(d, "00_events.parquet"),
-    )
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts")
     )
@@ -976,56 +846,64 @@ def stream_late_data_policy(spark, sf_dir):
             F.lit("{}").alias("props"),
         )
     )
-    def _stage(df, name, stamp):
-        if kind == "nanos":
-            df = df.withColumn("ts", F.unix_micros("ts") * F.lit(1000))
-        elif kind == "ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        path = os.path.join(d, name)
-        df.coalesce(1).write.parquet(path)
-        # pin the mtime explicitly (round 15) — the old 1.1 s sleep
-        # bought the same strict ordering by waiting out the clock
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (stamp, stamp))
+    # the landing dir goes away on return or raise; the memory-sink
+    # result reads nothing from it
+    with stream_workspace("hbs_latestream") as d:
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(d, "00_events.parquet"),
+        )
 
-    # distinct PINNED mtimes + ordered names pin the batch order:
-    # history (the fixture's own old mtime), then fresh
-    # (advances/evicts), then stale (post-eviction → drop); stamps sit
-    # after the fixture file's mtime because they are "now"
-    now = _time.time()
-    _stage(fresh, "01_fresh.parquet", now + 10)
-    _stage(stale, "02_stale.parquet", now + 20)
-    schema = {
-        "nanos": _SCHEMA_TS_NANOS_LONG,
-        "ntz": _SCHEMA_TS_NTZ,
-        "ltz": _SCHEMA_TS_LTZ,
-    }[kind]
-    raw = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(d)
-    )
-    if kind == "nanos":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif kind == "ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    hourly = (
-        raw.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count("*").alias("n"))
-    )
-    out = run_to_memory(hourly, output_mode="update", name=None)
-    final = out.groupBy("window").agg(F.max("n").alias("n"))
-    return final.agg(
-        F.sum("n").alias("counted_events"),
-        F.count("*").alias("n_windows"),
-        (
-            F.lit(n_history + _LATE_FRESH + _LATE_STALE) - F.sum("n")
-        ).alias("dropped_late"),
-    )
+        def _stage(df, name, stamp):
+            if kind == "nanos":
+                df = df.withColumn("ts", F.unix_micros("ts") * F.lit(1000))
+            elif kind == "ntz":
+                df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+            path = os.path.join(d, name)
+            df.coalesce(1).write.parquet(path)
+            # pin the mtime explicitly (round 15) — the old 1.1 s sleep
+            # bought the same strict ordering by waiting out the clock
+            for root, _dirs, files in os.walk(path):
+                for fn in files:
+                    os.utime(os.path.join(root, fn), (stamp, stamp))
+
+        # distinct PINNED mtimes + ordered names pin the batch order:
+        # history (the fixture's own old mtime), then fresh
+        # (advances/evicts), then stale (post-eviction → drop); stamps sit
+        # after the fixture file's mtime because they are "now"
+        now = _time.time()
+        _stage(fresh, "01_fresh.parquet", now + 10)
+        _stage(stale, "02_stale.parquet", now + 20)
+        schema = {
+            "nanos": _SCHEMA_TS_NANOS_LONG,
+            "ntz": _SCHEMA_TS_NTZ,
+            "ltz": _SCHEMA_TS_LTZ,
+        }[kind]
+        raw = (
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .option("maxFilesPerTrigger", "1")
+            .format("parquet")
+            .load(d)
+        )
+        if kind == "nanos":
+            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif kind == "ntz":
+            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        hourly = (
+            raw.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"))
+            .agg(F.count("*").alias("n"))
+        )
+        out = run_to_memory(hourly, output_mode="update", name=None)
+        final = out.groupBy("window").agg(F.max("n").alias("n"))
+        return final.agg(
+            F.sum("n").alias("counted_events"),
+            F.count("*").alias("n_windows"),
+            (
+                F.lit(n_history + _LATE_FRESH + _LATE_STALE) - F.sum("n")
+            ).alias("dropped_late"),
+        )
 
 
 # -- chained stateful: dedup -> windowed distinct count (round 10) -------------------

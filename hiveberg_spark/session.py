@@ -9,6 +9,7 @@ partitioning).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -16,6 +17,59 @@ from pyspark.sql import SparkSession
 # At 100 TB these come from cluster conf / dynamic allocation; locally the
 # driver contract runs on local[$SPARK_GRAFT_CPUS].
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+# Confs every query needs regardless of who built the session. The
+# correctness driver passes its OWN SparkSession into queries(), so
+# `ensure_runtime_conf` sets these at runtime as well as the builder.
+_RUNTIME_CONF = {
+    # Spark has no nanosecond timestamp type. Historical fixture
+    # generations carried events.ts as TIMESTAMP(NANOS) (current ones are
+    # timestamp[us]); the conf is a no-op for micros files and keeps a
+    # fixture revert to nanos readable (catalog.py and streaming/events.py
+    # adapt per-file).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Spark-3 arithmetic semantics: 64-bit wraparound multiply is the
+    # basis of the rolling/minhash fingerprint math (ANSI mode would
+    # raise on intentional overflow); no query here relies on
+    # error-on-cast behavior.
+    "spark.sql.ansi.enabled": "false",
+    # timestamp formatting/epoch outputs must be timezone-stable
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # INT96 (the legacy default) carries NO parquet footer statistics, so
+    # timestamp predicates could never prune snapshot-table files; micros
+    # is the modern interoperable physical type (DuckDB/Arrow read it
+    # natively) and footer min/max work
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # the hiveberg Python Data Source facade (sources/pyds.py) routes
+    # pushed filters into manifest min/max pruning; off by default in
+    # Spark 4.1 while the Python pushdown API stabilizes
+    "spark.sql.python.filterPushdown.enabled": "true",
+    # InferFiltersFromGenerate infers `size(e) > 0` from explode(e)
+    # and predicate pushdown then re-substitutes e THROUGH the
+    # projections, shoving the full expression below the parallelism
+    # exchange — for this engine's expensive derived arrays (3-gram
+    # shingle construction, k-gram windows) that evaluates the most
+    # expensive expression in the pipeline twice, once on the
+    # narrow PRE-shuffle side (serial on a single-file scan).
+    # Measured: the shingle->minhash fingerprint pass drops 9.5s ->
+    # 0.8s at sf0.1 with the rule excluded (OPTIMIZATION_r14.md).
+    # The rule only ever infers redundant filters (explode already
+    # drops empty/null arrays), so plans stay semantically identical.
+    "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # Snapshot-table scans pass EXPLICIT leaf-file lists from the
+    # manifest (no directory recursion), so driver-side listing is
+    # O(files-in-scan) stat calls; Spark's default threshold (32
+    # paths) instead launches a DISTRIBUTED listing job per scan —
+    # a whole Spark job to stat a few dozen local files (visible as
+    # "Listing leaf files and directories for N paths" jobs in every
+    # multi-file scan profile). 512 keeps manifest-sized lists on
+    # the driver; a lake-scale deployment with thousands of files
+    # per scan still gets the parallel path.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "512",
+}
 
 
 def get_spark(
@@ -38,109 +92,30 @@ def get_spark(
         engines (the reference leaks timestamps as bigints instead —
         IcebergSchemaToTypeInfo.java:48-49 — which we deliberately do not
         replicate).
-      - nanosAsLong: Spark has no nanosecond timestamp type. Historical
-        fixture generations carried events.ts as TIMESTAMP(NANOS) (current
-        ones are timestamp[us]); the conf stays on as a no-op for micros
-        files so a fixture revert to nanos keeps reading (catalog.py and
-        streaming/events.py adapt per-file).
     """
     master = master or f"local[{_DEF_CPUS}]"
     cpus = os.cpu_count() or 8
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Spark-3 arithmetic semantics: 64-bit wraparound multiply is the
-        # basis of the rolling/minhash fingerprint math (ANSI mode would
-        # raise on intentional overflow); no query here relies on
-        # error-on-cast behavior.
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        # InferFiltersFromGenerate infers `size(e) > 0` from explode(e)
-        # and predicate pushdown then re-substitutes e THROUGH the
-        # projections, shoving the full expression below the parallelism
-        # exchange — for this engine's expensive derived arrays (3-gram
-        # shingle construction, k-gram windows) that evaluates the most
-        # expensive expression in the pipeline twice, once on the
-        # narrow PRE-shuffle side (serial on a single-file scan).
-        # Measured: the shingle->minhash fingerprint pass drops 9.5s ->
-        # 0.8s at sf0.1 with the rule excluded (OPTIMIZATION_r14.md).
-        # The rule only ever infers redundant filters (explode already
-        # drops empty/null arrays), so plans stay semantically identical.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        # Snapshot-table scans pass EXPLICIT leaf-file lists from the
-        # manifest (no directory recursion), so driver-side listing is
-        # O(files-in-scan) stat calls; Spark's default threshold (32
-        # paths) instead launches a DISTRIBUTED listing job per scan —
-        # a whole Spark job to stat a few dozen local files (visible as
-        # "Listing leaf files and directories for N paths" jobs in every
-        # multi-file scan profile). 512 keeps manifest-sized lists on
-        # the driver; a lake-scale deployment with thousands of files
-        # per scan still gets the parallel path.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-        # Python Data Source facade (sources/pyds.py): let pushFilters
-        # feed manifest pruning
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        # INT96 timestamps carry no footer stats (kills snapshot-table
-        # temporal pruning) and are legacy; micros is Arrow/DuckDB-native
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.schemaInference", "false")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.master(master).appName(app_name)
+    build_conf = {
+        **_RUNTIME_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.streaming.schemaInference": "false",
+    }
+    for k, v in {**build_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-# Runtime-settable confs every query needs regardless of who built the
-# session (the correctness driver passes its OWN SparkSession into
-# queries(), so these cannot live only in the builder above):
-#   - nanosAsLong: harmless for the current timestamp[us] events fixture,
-#     required if the driver ever reverts it to TIMESTAMP(NANOS)
-#   - ansi off: fingerprint/minhash math uses 64-bit wraparound multiply
-#   - UTC: timestamp formatting/epoch outputs must be timezone-stable
-_RUNTIME_CONF = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # INT96 (the legacy default) carries NO parquet footer statistics, so
-    # timestamp predicates could never prune snapshot-table files; micros
-    # is the modern interoperable physical type (DuckDB/Arrow read it
-    # natively) and footer min/max work
-    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-    # the hiveberg Python Data Source facade (sources/pyds.py) routes
-    # pushed filters into manifest min/max pruning; off by default in
-    # Spark 4.1 while the Python pushdown API stabilizes
-    "spark.sql.python.filterPushdown.enabled": "true",
-    # keep explode's inferred size()>0 filter from dragging expensive
-    # derived-array expressions below the exchange (see the builder
-    # comment above — measured 12x on the fingerprint pass; inferred
-    # filters are redundant for generate, results identical)
-    "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    # manifest scans pass explicit leaf files: stat them on the driver
-    # instead of launching a distributed listing job at >=32 paths
-    # (see the builder comment above)
-    "spark.sql.sources.parallelPartitionDiscovery.threshold": "512",
-}
 
 
 _ENSURED_SESSIONS: "weakref.WeakSet" = None  # built lazily below
@@ -172,3 +147,18 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
             pass  # static conf in some deployment: builder already set it
     _ENSURED_SESSIONS.add(spark)
     return spark
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, key: str, value: str):
+    """Set a runtime conf for the block, then put back what was there
+    before: the prior value, or no value at all if the key was unset."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -245,17 +245,6 @@ def _decode_value(data: bytes, pos: int, s: dict):
     raise TypeError(t)  # pragma: no cover
 
 
-def _is_null(v) -> bool:
-    if v is None:
-        return True
-    import pandas as pd
-
-    try:
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
-
-
 # -- container file write/read ---------------------------------------------
 
 
@@ -363,13 +352,14 @@ class _ColStats:
     def __init__(self, spec: list[dict]):
         self.lo: dict[str, object] = {}
         self.hi: dict[str, object] = {}
+        self.nan: set[str] = set()  # float columns that held a NaN
         self.spec = spec
 
     def update_batch(self, arrays: dict) -> None:
         """Fold one Arrow batch slice ({col name: pa.Array}) into the
-        running bounds. Nulls are skipped by the kernel; NaNs are
-        filtered out first for float columns (Arrow's min_max would
-        otherwise propagate them, while NaN proves nothing)."""
+        running bounds. Nulls are skipped by the kernel. A float column
+        that holds a NaN keeps no bounds: Spark orders NaN above every
+        number, so no finite range can stand for it."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -378,12 +368,13 @@ class _ColStats:
             if logical == "decimal" or t in ("boolean", "bytes"):
                 continue
             arr = arrays.get(name)
-            if arr is None or len(arr) == arr.null_count:
+            if arr is None or len(arr) == arr.null_count or name in self.nan:
                 continue
-            if pa.types.is_floating(arr.type):
-                arr = pc.filter(arr, pc.invert(pc.is_nan(arr)))
-                if len(arr) == 0:
-                    continue
+            if pa.types.is_floating(arr.type) and pc.any(pc.is_nan(arr)).as_py():
+                self.nan.add(name)
+                self.lo.pop(name, None)
+                self.hi.pop(name, None)
+                continue
             mm = pc.min_max(arr)  # skip_nulls=True by default
             mn_s, mx_s = mm["min"], mm["max"]
             if not mn_s.is_valid:
@@ -583,7 +574,7 @@ def write_avro(
                     row = tuple(c[i] for c in cols)
                     for v, s in zip(row, spec):
                         if s["nullable"]:
-                            if _is_null(v):
+                            if v is None:
                                 _append_long(buf, 0)
                                 continue
                             _append_long(buf, 1)
@@ -634,7 +625,9 @@ def rows_to_pandas(fspec: list[dict], rows: list[list], names: list[str] | None 
     mapInPandas decoder and the facade's per-file Arrow read, so a new
     logical type lands in exactly one place."""
     import pandas as pd
+    import pyarrow as pa
 
+    float_types = {"float": pa.float32(), "double": pa.float64()}
     names = names or [s["name"] for s in fspec]
     data: dict = {}
     for i, s in enumerate(fspec):
@@ -644,6 +637,14 @@ def rows_to_pandas(fspec: list[dict], rows: list[list], names: list[str] | None 
         elif s["logical"] == "date":
             data[names[i]] = pd.Series(
                 pd.to_datetime(col, unit="D").date, dtype=object
+            )
+        elif s["type"] in ("float", "double"):
+            # Arrow-backed, so a NaN stays NaN: converting a pandas float
+            # or object column to Arrow reads every NaN as NULL
+            data[names[i]] = pd.Series(
+                pd.arrays.ArrowExtensionArray(
+                    pa.array(col, type=float_types[s["type"]])
+                )
             )
         else:
             data[names[i]] = pd.Series(col, dtype=object)
@@ -694,34 +695,6 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-_spark_avro_probe: dict[int, bool] = {}
-
-
-def spark_avro_available(spark: SparkSession) -> bool:
-    """True iff the native `avro` DATA SOURCE is usable in this session
-    — the roadmapped swap point for this codec's 10-100× read-
-    throughput gap vs the JVM reader at scale. A functional probe, not
-    a classpath check: Spark distributions can carry the avro CLASSES
-    while the module is still not deployed as a data source (this
-    environment does exactly that — `Class.forName` succeeds but
-    `format("avro")` raises FAILED_TO_FIND_DATA_SOURCE), so the probe
-    attempts a real source resolution and classifies the failure:
-    source-not-found ⇒ unavailable; path errors ⇒ the source resolved
-    fine. Memoized per session."""
-    key = id(spark)
-    if key not in _spark_avro_probe:
-        try:
-            spark.read.format("avro").schema("__hbs_probe int").load(
-                "/nonexistent/__hbs_avro_probe__"
-            )
-            _spark_avro_probe[key] = True
-        except Exception as exc:
-            _spark_avro_probe[key] = (
-                "Failed to find data source" not in str(exc)
-            )
-    return _spark_avro_probe[key]
-
-
 def read_avro_files(
     spark: SparkSession, files: list[str], renames: list[dict] | None = None
 ) -> DataFrame:
@@ -729,16 +702,7 @@ def read_avro_files(
     table's planned-file-list scan path). Files written under different
     generations of a renamed schema are resolved to current names
     through `renames` (list of {"from","to"} in log order); types must
-    agree — only names evolve.
-
-    When the spark-avro jar is present AND no rename resolution is
-    needed, the native vectorized reader takes over (the files are
-    standard Avro 1.11 containers, written by either side) — the
-    jar-drop swap the roadmap promises, scoped to the hot bulk-ingest
-    path; renamed-generation files keep the per-file header resolution
-    only this decoder performs."""
+    agree — only names evolve."""
     if not files:
         raise ValueError("read_avro_files: empty file list")
-    if not renames and spark_avro_available(spark):
-        return spark.read.format("avro").load(list(files))
     return _read_avro_listing(spark, list(files), files[0], renames)

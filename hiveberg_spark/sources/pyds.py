@@ -759,7 +759,6 @@ class _AvroTaskWriter:
         from hiveberg_spark.sources.avro_io import (
             _append_long,
             _encode_value,
-            _is_null,
             _write_block,
         )
 
@@ -772,7 +771,7 @@ class _AvroTaskWriter:
             for c, sp in zip(cols, self.spec):
                 v = c[i]
                 if sp["nullable"]:
-                    if _is_null(v):
+                    if v is None:
                         _append_long(buf, 0)
                         continue
                     _append_long(buf, 1)
@@ -1080,6 +1079,7 @@ class HivebergDataWriter(DataSourceArrowWriter):
 
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -1117,10 +1117,26 @@ class HivebergDataWriter(DataSourceArrowWriter):
             kwargs = {}
             if spec["compression"]:
                 kwargs["compression"] = spec["compression"]
+            # pyarrow leaves NaN out of a footer's min/max, while Spark
+            # orders NaN above every number: a file opened after a float
+            # column held a NaN writes no statistics for that column
             mk_writer = lambda path: pq.ParquetWriter(  # noqa: E731
-                path, arrow_schema, **kwargs
+                path,
+                arrow_schema,
+                write_statistics=[
+                    f.name for f in arrow_schema if f.name not in nan_cols
+                ]
+                if nan_cols
+                else True,
+                **kwargs,
             )
             put = lambda w, tab: w.write_table(tab)  # noqa: E731
+        float_cols = (
+            [f.name for f in arrow_schema if pa.types.is_floating(f.type)]
+            if fmt == "parquet"
+            else []
+        )
+        nan_cols: set[str] = set()
         pnames = [p["name"] for p in self.spec_part_plan]
         baked = dict(spec["baked"])
         # per-field single-element constants, built once per task
@@ -1129,7 +1145,8 @@ class HivebergDataWriter(DataSourceArrowWriter):
             for f in arrow_schema
             if f.name in baked and baked[f.name] is not None
         }
-        # dir -> [writer, tmp, final, partition values, rows, stats]
+        # dir -> [writer, tmp, final, partition values, rows, stats,
+        #         float columns written without statistics]
         sinks: dict[str, list] = {}
         sealed: list[list] = []
 
@@ -1154,10 +1171,11 @@ class HivebergDataWriter(DataSourceArrowWriter):
                     pvals,
                     0,
                     cs,
+                    set(nan_cols),
                 ]
             return s
 
-        def maybe_roll(subdir: str) -> None:
+        def maybe_roll(subdir: str, force: bool = False) -> None:
             # every write_table flushes a row group, so the on-disk
             # size is current; past the target, SEAL and start fresh.
             # Sealed files stay `.inprogress` until the whole task
@@ -1165,10 +1183,28 @@ class HivebergDataWriter(DataSourceArrowWriter):
             # must never leave published-looking files behind
             target = spec.get("target_bytes")
             s = sinks.get(subdir)
-            if target and s and os.path.getsize(s[1]) >= target:
+            if s and (force or target and os.path.getsize(s[1]) >= target):
                 s[0].close()
                 sealed.append(s)
                 del sinks[subdir]
+
+        def write_to(subdir: str, pvals: dict, tab) -> None:
+            new_nan = {
+                c for c in float_cols if pc.any(pc.is_nan(tab[c])).as_py()
+            }
+            nan_cols.update(new_nan)
+            s = sinks.get(subdir)
+            if s is not None and not new_nan <= s[6]:
+                # seal the open file while its statistics still hold
+                maybe_roll(subdir, force=True)
+            s = sink_for(subdir, pvals)
+            put(s[0], tab)
+            s[4] += tab.num_rows
+            if s[5] is not None:
+                s[5].update_batch(
+                    {c: tab[c].combine_chunks() for c in tab.column_names}
+                )
+            maybe_roll(subdir)
 
         try:
             for batch in iterator:
@@ -1190,14 +1226,7 @@ class HivebergDataWriter(DataSourceArrowWriter):
                         arrays.append(pa.nulls(rows, field.type))
                 out = pa.table(arrays, schema=arrow_schema)
                 if not self.spec_part_plan:
-                    s = sink_for("", {})
-                    put(s[0], out)
-                    s[4] += rows
-                    if s[5] is not None:
-                        s[5].update_batch(
-                            {c: out[c].combine_chunks() for c in out.column_names}
-                        )
-                    maybe_roll("")
+                    write_to("", {}, out)
                     continue
                 # hidden-partition fan-out: per-transform logical value
                 # strings (null-flag-prefixed), composite np.unique for
@@ -1214,22 +1243,17 @@ class HivebergDataWriter(DataSourceArrowWriter):
                         None if u[0] == "N" else u[1:] for u in uniq[gi]
                     )
                     pvals = dict(zip(pnames, vals))
-                    subdir = _partition_dir(pnames, vals)
-                    sub = out.filter(pa.array(inverse == gi))
-                    s = sink_for(subdir, pvals)
-                    put(s[0], sub)
-                    s[4] += sub.num_rows
-                    if s[5] is not None:
-                        s[5].update_batch(
-                            {c: sub[c].combine_chunks() for c in sub.column_names}
-                        )
-                    maybe_roll(subdir)
+                    write_to(
+                        _partition_dir(pnames, vals),
+                        pvals,
+                        out.filter(pa.array(inverse == gi)),
+                    )
         finally:
             for s in sinks.values():
                 s[0].close()
         files = []
         for s in sealed + list(sinks.values()):
-            _, tmp, final, pvals, nrows, cs = s
+            _, tmp, final, pvals, nrows, cs, _ = s
             os.rename(tmp, final)  # task-end publish, attempt-atomic
             files.append(
                 {

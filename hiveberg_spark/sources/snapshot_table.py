@@ -291,9 +291,7 @@ _LOCK_WAIT_SECS = 60.0
 # live-entry count (estimated from snapshot summaries, no manifest read)
 # at which plan_files switches from the driver loop to a distributed
 # manifest-reading Spark job — the scale path past the driver ceiling
-_DISTRIBUTED_PLAN_THRESHOLD = int(
-    os.environ.get("HBS_DISTRIBUTED_PLAN_THRESHOLD", "100000")
-)
+_DISTRIBUTED_PLAN_THRESHOLD = 100_000
 
 # sentinel: _commit callers that did no pre-planning (plain appends)
 # skip parent validation; replacing commits always pass the snapshot id

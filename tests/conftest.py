@@ -41,8 +41,10 @@ def sf_dir():
     return SF_DIR
 
 
-@pytest.fixture(scope="session")
+@pytest.fixture()
 def duck():
+    # one connection per test: closing it returns the memory DuckDB keeps
+    # after a heavy oracle, which a session-long connection holds onto
     from hiveberg_spark.testing import duckdb_connect
 
     con = duckdb_connect(SF_DIR)

@@ -132,34 +132,6 @@ def test_avro_roundtrip_nullable_bigint_above_2_53(spark, tmp_path):
     assert got == {1: big, 2: None, 3: big + 1}
 
 
-def test_spark_avro_probe_and_native_swap_gate(spark):
-    # this container ships no spark-avro jar: probe must say so (never
-    # raise), and the python codec path must remain the one taken
-    from hiveberg_spark.sources.avro_io import spark_avro_available
-
-    assert spark_avro_available(spark) is False
-
-
-def test_native_avro_roundtrip_when_jar_present(spark, tmp_path):
-    # skipped unless the spark-avro jar ships: python-written containers
-    # must read bit-equal through the native vectorized reader
-    from hiveberg_spark.sources.avro_io import (
-        spark_avro_available,
-        write_avro,
-    )
-
-    if not spark_avro_available(spark):
-        pytest.skip("spark-avro jar not on the classpath")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    out = str(tmp_path / "native")
-    write_avro(df, out)
-    import glob
-
-    files = sorted(glob.glob(out + "/*.avro"))
-    native = spark.read.format("avro").load(files)
-    assert sorted(map(tuple, native.collect())) == [(1, "a"), (2, "b")]
-
-
 def test_avro_timestamp_logicals_preserve_declared_type(spark, tmp_path):
     """Avro spec: `timestamp-micros` is an INSTANT (Spark TimestampType),
     `local-timestamp-micros` is wall-clock (TimestampNTZType) — the

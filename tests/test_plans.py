@@ -5,6 +5,8 @@ against actual Catalyst plans."""
 
 from __future__ import annotations
 
+import pytest
+
 from hiveberg_spark import registry
 from hiveberg_spark.plans import (
     explain_str,
@@ -12,6 +14,7 @@ from hiveberg_spark.plans import (
     read_schema_columns,
     assert_whole_stage_codegen,
 )
+from hiveberg_spark.session import conf_override
 
 registry.load_all()
 
@@ -94,6 +97,33 @@ def test_epoch_shuffle_single_data_exchange(spark, sf_dir):
 def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+
+
+def test_conf_override_restores_a_set_or_unset_key(spark):
+    key = "spark.hbs.test.override"
+    with conf_override(spark, key, "a"):
+        with conf_override(spark, key, "b"):
+            assert spark.conf.get(key) == "b"
+        assert spark.conf.get(key) == "a"
+    assert spark.conf.get(key, None) is None
+
+
+@pytest.mark.parametrize(
+    "name,key,value",
+    [
+        ("join_bucketed_colocate", "spark.sql.autoBroadcastJoinThreshold", "1048576"),
+        ("snapshot_table_properties", "spark.sql.adaptive.coalescePartitions.enabled", "false"),
+        ("snapshot_zorder_table", "spark.sql.adaptive.coalescePartitions.enabled", "false"),
+    ],
+)
+def test_query_keeps_the_session_conf_it_overrides(
+    spark, sf_dir, tmp_path, monkeypatch, name, key, value
+):
+    # a fresh fixture dir, so the table builders that override run here
+    monkeypatch.setenv("SPARK_GRAFT_TMP", str(tmp_path))
+    with conf_override(spark, key, value):
+        registry.QUERIES[name](spark, sf_dir).collect()
+        assert spark.conf.get(key) == value
 
 
 def test_no_forced_broadcast_on_fact_tables():
@@ -186,14 +216,13 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path_factory):
     ).saveAsTable("o_bucketed")
     a = spark.table("li_bucketed")
     b = spark.table("o_bucketed")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        joined.collect()
-        plan = explain_str(joined, "simple")
+        with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+            joined = a.join(b, a.l_orderkey == b.o_orderkey)
+            joined.collect()
+            plan = explain_str(joined, "simple")
         assert "Exchange" not in plan, plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS li_bucketed")
         spark.sql("DROP TABLE IF EXISTS o_bucketed")
 

@@ -1628,3 +1628,59 @@ def test_incremental_read_by_timestamp_options(spark, warehouse):
         _facade(
             spark, loc, start_timestamp_ms="1000", start_snapshot_id="1"
         ).collect()
+
+
+@pytest.mark.parametrize(
+    "writer,fmt",
+    [
+        (w, f)
+        for w in ("engine", "facade")
+        for f in ("parquet", "avro", "orc")
+    ],
+)
+def test_nan_round_trips_and_is_never_pruned(spark, warehouse, writer, fmt):
+    """A NaN in a float column reads back as NaN, not NULL, and no file
+    bound (manifest or footer) hides it from a predicate it satisfies:
+    Spark orders NaN above every number, so `d > 5` holds for it."""
+    import math
+
+    loc = os.path.join(warehouse, f"nan_{writer}_{fmt}")
+    t = SnapshotTable.create(
+        spark, loc, schema="id int, d double", file_format=fmt
+    )
+    # one file holds both rows, so its bounds must cover the NaN
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, float("nan"))], "id int, d double"
+    ).coalesce(1)
+    if writer == "engine":
+        t.append(df)
+    else:
+        df.write.format("hiveberg").mode("append").save(loc)
+    t = SnapshotTable.load(spark, loc)
+    got = dict(t.scan(virtual_column=None).select("id", "d").collect())
+    assert got[1] == 1.0 and got[2] is not None and math.isnan(got[2]), got
+    for hits in (
+        t.scan_where("d > 5", virtual_column=None),
+        t.scan(virtual_column=None).where("d > 5"),
+    ):
+        assert [r.id for r in hits.collect()] == [2]
+
+
+def test_facade_parquet_seals_file_before_first_nan(spark, warehouse):
+    """A batch that brings the first NaN into a column seals the open
+    file, whose footer bounds stay valid, and the task continues in a
+    file that writes no statistics for that column."""
+    from hiveberg_spark.session import conf_override
+
+    loc = os.path.join(warehouse, "nan_roll")
+    t = SnapshotTable.create(spark, loc, schema="id int, d double")
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 2.0)], "id int, d double"
+    ).coalesce(1)
+    with conf_override(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "1"):
+        df.write.format("hiveberg").mode("append").save(loc)
+    t = SnapshotTable.load(spark, loc)
+    assert len(t.plan_files()) == 2
+    assert len(t.plan_files("d < 1.5")) == 2
+    assert len(t.plan_files("d > 5")) == 1
+    assert [r.id for r in t.scan_where("d > 5", virtual_column=None).collect()] == [2]

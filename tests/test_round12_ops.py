@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hiveberg_spark.session import conf_override
+
 
 def test_decimal38_product_overflow_nulls_and_guard_rejects(spark):
     """Semantics pin for the chisq denominator guard: a decimal(38,0)
@@ -75,17 +77,13 @@ def test_file_lookup_literal_is_ansi_safe(spark):
         [("a.parquet",), ("missing.parquet",), ("dropped.parquet",)],
         "__hb_file string",
     )
-    prev = spark.conf.get("spark.sql.ansi.enabled")
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
+    with conf_override(spark, "spark.sql.ansi.enabled", "true"):
         got = {
             r["__hb_file"]: r.v
             for r in df.select(
                 F.col("__hb_file"), lookup.alias("v")
             ).collect()
         }
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", prev)
     assert got == {
         "a.parquet": 10,
         "missing.parquet": None,

@@ -106,3 +106,29 @@ def test_stream_query_rerun_after_failure_matches_oracle(
     problems = compare(result, duck.sql(registry.ORACLES[name]).df())
     assert not problems, f"{name}: " + "; ".join(problems)
     assert glob.glob(str(tmp_path / "hbs_*")) == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_upsert_sink",
+        "stream_scd_enrichment",
+        "stream_branch_wap",
+        "stream_bot_rate_monitor",
+        "stream_late_data_policy",
+    ],
+)
+def test_stream_query_leaves_no_workspace(
+    spark, sf_dir, duck, tmp_path, monkeypatch, name
+):
+    from hiveberg_spark.streaming.events import _stream_input_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    # the events landing dir is a per-fixture cache that every
+    # events_stream call shares, not a per-call workspace
+    cache = _stream_input_dir(sf_dir)
+    result = registry.QUERIES[name](spark, sf_dir)
+    assert glob.glob(str(tmp_path / "hbs_*")) == [cache]
+    # the result is read only after its workspace is gone
+    problems = compare(result, duck.sql(registry.ORACLES[name]).df())
+    assert not problems, f"{name}: " + "; ".join(problems)

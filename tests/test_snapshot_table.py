@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hiveberg_spark.session import conf_override
 from hiveberg_spark.sources.snapshot_table import (
     SnapshotTable,
     resolve_table,
@@ -1766,8 +1767,7 @@ def test_sort_order_with_range_distribution_prunes_to_one_file(
     # AQE would rightly coalesce this toy commit into one partition
     # (tiny data); pin it off so the range exchange keeps several
     # output files, as it would for a real-size commit
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    with conf_override(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
         t.append(
             spark.createDataFrame(
                 [(i, f"r{i}") for i in range(4000)], "id long, data string"
@@ -1789,8 +1789,6 @@ def test_sort_order_with_range_distribution_prunes_to_one_file(
             ).repartition(8)
         )
         assert len(u.plan_files("id = 1234")) == len(u.plan_files())
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
 
 
 def test_widen_column_int_to_long(spark, warehouse):
@@ -2023,12 +2021,9 @@ def test_zorder_write_clustering_prunes_both_dimensions(spark, warehouse):
     lin.set_properties(
         {"write.sort.order": "x", "write.distribution.mode": "range"}
     )
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    with conf_override(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
         z.append(df)
         lin.append(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     n_z, n_lin = len(z.plan_files()), len(lin.plan_files())
     assert n_z > 1 and n_lin > 1
     # both layouts prune on the leading key
@@ -3230,15 +3225,12 @@ def test_in_list_pruning_minmax_and_bucket(spark, warehouse):
     r.set_properties(
         {"write.sort.order": "id", "write.distribution.mode": "range"}
     )
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
+    with conf_override(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
         r.append(
             spark.createDataFrame(
                 [(i, f"r{i}") for i in range(4000)], "id long, v string"
             ).repartition(8)
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert len(r.plan_files()) > 2
     assert len(r.plan_files("id IN (5, 3990)")) <= 2
     # every member outside the table's range -> zero files planned
@@ -3749,12 +3741,8 @@ def test_driver_write_round_trips_every_accepted_type(spark, warehouse):
     # the footer's Spark version marks the proleptic calendar, so even a
     # session that refuses ambiguous pre-1582 values reads them
     key = "spark.sql.parquet.datetimeRebaseModeInRead"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "EXCEPTION")
-    try:
+    with conf_override(spark, key, "EXCEPTION"):
         rows = got.collect()
-    finally:
-        spark.conf.set(key, prev)
     assert sorted(rows, key=str) == sorted(src.collect(), key=str)
     assert sorted(t.scan_where("l >= 4000", virtual_column=None).collect(), key=str) == sorted(
         src.where("l >= 4000").collect(), key=str
